@@ -20,6 +20,7 @@ import json
 import os
 import sys
 import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -203,7 +204,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    from spark_ml_algo_lib_master_tongji_spark.registry import build_registry
+    from spark_ml_algo_lib_master_tongji_spark.registry import declared_queries
     from spark_ml_algo_lib_master_tongji_spark.session import get_session
 
     def _la1() -> float:
@@ -233,30 +234,29 @@ def main() -> None:
     # (round 2: a single registry crash zeroed BENCH_r02.json).
     from spark_ml_algo_lib_master_tongji_spark import benchlib
 
-    for name, fn in build_registry().items():
+    for name, fn in declared_queries().items():
         # loadDataTime/costTime split (``KMeansRunner.scala:132-133,156``):
         # the _derived* caches report each session-shared derivation build
-        # to benchlib; the tally delta around a query is its "load" (paid
-        # once, on first touch), wall − load its "cost" — so per-query cost
-        # numbers are comparable across runs regardless of registry order.
-        load0 = benchlib.load_seconds()
+        # to benchlib; the load delta around a query is its "load" (paid
+        # once, on first touch), wall − load its "cost". The run order is
+        # the fixed declaration order, not the driver-window order, so a
+        # window rotation never moves first-touch loads between rows.
         t0 = time.perf_counter()
         try:
-            df = fn(spark, sf_dir)
-            # materialize() = persist-then-count (full-output protocol; see
+            # timed_run = persist-then-count (full-output protocol; see the
             # benchlib docstring) with unpersist in a finally so a failing
             # query can never leave partitions pinned (round-4 ADVICE).
-            if name in _EVAL_QUERIES:
-                n, first = benchlib.materialize(df, collect_first=True)
-            else:
-                n, first = benchlib.materialize(df), None
+            dt, load, n, first = benchlib.timed_run(
+                partial(fn, spark, sf_dir), collect_first=name in _EVAL_QUERIES
+            )
         except Exception as exc:  # noqa: BLE001 - record and continue
-            dt = time.perf_counter() - t0
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-            print(f"# {name}: ERROR after {dt:.3f}s: {errors[name]}", file=sys.stderr)
+            print(
+                f"# {name}: ERROR after {time.perf_counter() - t0:.3f}s: "
+                f"{errors[name]}",
+                file=sys.stderr,
+            )
             continue
-        dt = time.perf_counter() - t0
-        load = benchlib.load_seconds() - load0
         if load > 0.05:
             loads[name] = round(load, 2)
         timings[name] = round(dt, 4)
@@ -311,7 +311,8 @@ def main() -> None:
     # 4-decimal line was truncated mid-JSON by the capture window).
     # The driver keeps only the LAST ~2000 chars, so serialization order is
     # survival priority, lowest first: the queries dict is emitted in
-    # REVERSE registry order (tier-1 priority window last), and loads /
+    # REVERSE run order (module declaration order, so the rows declared
+    # first survive the cut), and loads /
     # evaluation / value go at the very END — round 5 put loads BEFORE
     # queries and the surviving BENCH_r05 fragment had walls but no load
     # split, which cost the judge a round of attribution archaeology

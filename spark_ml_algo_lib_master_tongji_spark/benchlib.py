@@ -1,6 +1,7 @@
-"""Shared measurement protocol for bench.py and tools/time_query.py.
+"""Shared measurement protocol for bench.py and the timing tools.
 
-Two concerns live here because every timing entry point needs both:
+Two concerns live here because every timing entry point needs both;
+``timed_run`` joins them into the one timing core those entry points call:
 
 1. **Honest materialization** (``materialize``): persist-then-count forces
    full computation of every output column. A bare ``count()`` lets Catalyst
@@ -20,7 +21,7 @@ Two concerns live here because every timing entry point needs both:
    assembly, fitted models): whichever query touches a derivation first pays
    its full materialization, which made per-query numbers run-order-dependent
    (PLANS.md gbt post-mortem: 13.3s cold vs 0.7s shared). The ``_derived*``
-   caches report each build here; bench diffs the tally around each query to
+   caches report each build here; bench diffs the total around each query to
    split wall time into {load, cost}.
 """
 
@@ -29,6 +30,7 @@ from __future__ import annotations
 import contextlib
 import threading
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -57,19 +59,13 @@ def materialize(df: DataFrame, collect_first: bool = False):
             df.unpersist(blocking=False)
 
 
-#: derivation name → cumulative build seconds (process-global; per-name
-#: attribution detail — note these are THREAD-seconds: concurrent builds
-#: each record their own duration here. ``load_seconds`` below is the
-#: wall-clock aggregate bench diffs around each query).
-LOAD_TALLY: dict[str, float] = {}
-
 #: nesting depth is PER-THREAD (a build on thread A must not suppress a
-#: concurrent build on thread B), and the shared tally dict is written
+#: concurrent build on thread B), and the shared region state is written
 #: under a lock — parallel pytest workers in one process or a threaded
 #: driver would otherwise corrupt the depth and misattribute load time
 #: between queries (round-5 ADVICE).
 _local = threading.local()
-_tally_lock = threading.Lock()
+_region_lock = threading.Lock()
 
 # Wall-clock load-region accounting (round-14 verdict item 6): the anchor
 # rows build several derivations CONCURRENTLY from a thread pool, so
@@ -90,24 +86,21 @@ def load_timer(name: str):
     """Time a derivation build; only the OUTERMOST build on this thread
     records (builds nest — ``copurchase_pairs`` touches ``sym_copurchase``
     inside its own build — and recording both would double-count the
-    shared load)."""
+    shared load). ``name`` labels the build for tracing wrappers."""
     global _active_builds, _region_start, _region_total
     outermost = getattr(_local, "depth", 0) == 0
     _local.depth = getattr(_local, "depth", 0) + 1
     if outermost:
-        with _tally_lock:
+        with _region_lock:
             _active_builds += 1
             if _active_builds == 1:
                 _region_start = time.perf_counter()
-    t0 = time.perf_counter()
     try:
         yield
     finally:
-        dt = time.perf_counter() - t0
         _local.depth -= 1
         if _local.depth == 0:
-            with _tally_lock:
-                LOAD_TALLY[name] = LOAD_TALLY.get(name, 0.0) + dt
+            with _region_lock:
                 _active_builds -= 1
                 if _active_builds == 0:
                     _region_total += time.perf_counter() - _region_start
@@ -118,8 +111,21 @@ def load_seconds() -> float:
     builds so far (overlapping builds merged — see the region note above).
     Counts a still-open region's elapsed time so a mid-build read stays
     monotonic."""
-    with _tally_lock:
+    with _region_lock:
         total = _region_total
         if _active_builds:
             total += time.perf_counter() - _region_start
         return total
+
+
+def timed_run(query: Callable[[], DataFrame], collect_first: bool = False):
+    """Run ``query()`` and ``materialize`` its output; return
+    ``(wall, load, rows, first)`` — ``first`` is None unless
+    ``collect_first``. The load reading is taken before the clock starts,
+    so ``wall − load`` is the query's costTime analogue."""
+    load0 = load_seconds()
+    t0 = time.perf_counter()
+    out = materialize(query(), collect_first=collect_first)
+    rows, first = out if collect_first else (out, None)
+    wall = time.perf_counter() - t0
+    return wall, load_seconds() - load0, rows, first

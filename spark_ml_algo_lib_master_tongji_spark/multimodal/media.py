@@ -217,7 +217,7 @@ def mm_fake_decode(cat: Catalog) -> DataFrame:
     )
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "mm_manifest",
     "mm_frame_sample",

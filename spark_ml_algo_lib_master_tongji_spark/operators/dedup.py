@@ -529,7 +529,7 @@ def pipeline_semantic_dedup(
     return _keeper_election(pts, pairs)
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 def dedup_minhash_groups(cat: Catalog) -> DataFrame:
     """Keep-one canonicalization over the near-dup graph → (doc_id,
     canonical_id) for EVERY document — the mapping a training-data pipeline

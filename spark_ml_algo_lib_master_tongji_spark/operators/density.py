@@ -267,7 +267,7 @@ def ml_dbscan_grid_neighbors(cat: Catalog) -> DataFrame:
     return nbr.groupBy("p").agg(F.count(F.lit(1)).alias("c"))
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "ml_dbscan",
     "ml_dbscan_summary",

@@ -1585,7 +1585,7 @@ def graph_subgraph_matching(cat: Catalog) -> DataFrame:
     return subgraph_match_counts(pairs, csr=csr)
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "graph_edges",
     "graph_degrees",

@@ -10,8 +10,6 @@ the input and carries an exact unrolled-SQL oracle in ``graph_oracles``.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -717,28 +715,23 @@ def node2vec_biased_walks(cat: Catalog) -> DataFrame:
     return out
 
 
-#: Word2Vec training-partition lever — the scale knob of the one
-#: fit-bound node2vec row (round-13 verdict item 4 → proven by
-#: ``tools/node2vec_fit_ab.py`` at the 10× fixture, PLANS round-14
-#: addendum 5: numPartitions 1→8 cuts the fit 1.9× while keeping 2.8×
-#: more neighbor structure than a mere re-seed of the serial fit).
-#: Default 1 (spark.ml's own default): all gradient updates apply in one
-#: partition, so the fitted VECTORS are seed-deterministic — the pytest
-#: quality pins rely on that. At cluster scale set
-#: ``SPARK_GRAFT_W2V_PARTITIONS`` toward the executor count; each
-#: partition then trains Hogwild-style. The DECLARED query output
-#: (n_nodes, dim) is partition-invariant either way: with minCount=1 the
-#: vocabulary is exactly the distinct walk nodes, a pure function of the
-#: deterministic walk corpus.
-W2V_PARTITIONS = int(_os.environ.get("SPARK_GRAFT_W2V_PARTITIONS", "1"))
-
-
 def node2vec_embeddings(cat: Catalog) -> DataFrame:
     """Word2Vec skip-gram over the deterministic walks → one summary row
     (n_nodes, dim). The walk corpus is exact (see ``node2vec_walks``); the
     embedding fit is seeded spark.ml Word2Vec (``saveNode2VecModel``
-    surface, ``graph/Util.scala:203-208``) with the ``W2V_PARTITIONS``
-    scale lever (default serial — see the constant's note)."""
+    surface, ``graph/Util.scala:203-208``).
+
+    ``numPartitions=1`` (spark.ml's own default) applies all gradient
+    updates in one partition, so the fitted VECTORS are seed-deterministic —
+    the pytest quality pins rely on that. It is also the scale knob of this
+    fit-bound row: at the 10× fixture numPartitions 1→8 cut the fit 1.9×
+    while keeping 2.8× more neighbor structure than a mere re-seed of the
+    serial fit (commit 1bd3aed, ``report/NODE2VEC_FIT_AB_r15.json``). At
+    cluster scale raise it toward the executor count; each partition then
+    trains Hogwild-style. The DECLARED output (n_nodes, dim) is
+    partition-invariant either way: with minCount=1 the vocabulary is
+    exactly the distinct walk nodes, a pure function of the deterministic
+    walk corpus."""
     from pyspark.ml.feature import Word2Vec
 
     walks = node2vec_walks(cat)
@@ -754,7 +747,7 @@ def node2vec_embeddings(cat: Catalog) -> DataFrame:
         minCount=1,
         seed=2020,
         inputCol="sentence",
-        numPartitions=W2V_PARTITIONS,
+        numPartitions=1,
     ).fit(seqs)
     vecs = w2v.getVectors()
     return vecs.agg(
@@ -1159,7 +1152,7 @@ def _betweenness_overlap_metrics(cat: Catalog) -> tuple[int, int, int, float]:
         pairs.unpersist(blocking=False)
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "graph_incremental_pagerank",
     "graph_cycle_detection",

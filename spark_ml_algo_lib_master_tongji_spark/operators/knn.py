@@ -623,7 +623,7 @@ def sim_ivf_delta_search(cat: Catalog) -> DataFrame:
     )
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "ml_knn_spilltree",
     "ml_knn_spilltree_classifier",

@@ -65,12 +65,10 @@ LDA_MIN_DF = 2.0
 #:
 #: DOCUMENTED WAIVER (round-3 ADVICE): the reference trains these arms on
 #: the full input, so RDD-arm bench timings/metrics are *sampled*, not
-#: reference-comparable. ``SPARK_GRAFT_RDD_ARM_SAMPLE=1.0`` restores a
-#: full-data parity mode (any fraction in (0, 1] accepted); the waiver is
-#: recorded in COVERAGE.md.
-import os as _os
-
-RDD_ARM_SAMPLE = float(_os.environ.get("SPARK_GRAFT_RDD_ARM_SAMPLE", "0.2"))
+#: reference-comparable; the waiver is recorded in COVERAGE.md. The
+#: full-data parity run (sample 1.0, PLANS.md) was a one-off check, so the
+#: fraction is a constant, not an option.
+RDD_ARM_SAMPLE = 0.2
 
 
 def _features(cat: Catalog) -> DataFrame:
@@ -572,8 +570,8 @@ def ml_est_als_rdd(cat: Catalog) -> DataFrame:
     # per-block factor initialization, so the arm must STAY behaviorally
     # checked, r14 ADVICE). RDD_ARM_PARTITIONS itself is a pinned
     # fixture-scale constant (see its definition note); a full-data parity
-    # run (SPARK_GRAFT_RDD_ARM_SAMPLE=1.0) should raise it — and blocks
-    # with it — toward the input's real partition count.
+    # run (RDD_ARM_SAMPLE = 1.0) should raise it — and blocks with it —
+    # toward the input's real partition count.
     model = MllibALS.train(
         r, rank=8, iterations=5, lambda_=0.01, seed=SEED, blocks=RDD_ARM_PARTITIONS
     )
@@ -1301,7 +1299,8 @@ def ml_est_clf_acc_anchors(cat: Catalog) -> DataFrame:
     single-partition model stages). They are submitted from a thread pool so
     each job's tail is back-filled by the next (guide §2.6); values are
     unchanged — every fit is seeded and its jobs are identical under
-    co-scheduling (tools/fit_parallel_ab.py asserts scalar equality). The
+    co-scheduling (scalar equality shown by the A/B of commit e29c293;
+    ``test_combined_estimator_anchor_rows`` hash-matches the pooled rows). The
     shared feature relation is materialized BEFORE the pool so concurrent
     first-touch builds never race on the big input.
 
@@ -1756,7 +1755,7 @@ def ml_est_prefixspan(cat: Catalog) -> DataFrame:
     )
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "ml_est_kmeans",
     "ml_est_kmeans_wssse",

@@ -590,7 +590,7 @@ def ml_prefixspan(cat: Catalog) -> DataFrame:
     return l1.unionByName(l2)
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "ml_linreg_ols",
     "ml_kmeans_lloyd_assign",

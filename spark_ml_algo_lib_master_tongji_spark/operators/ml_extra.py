@@ -228,7 +228,7 @@ def q_sql_entry_top_suppliers(cat: Catalog) -> DataFrame:
     )
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "ml_est_pca_sparse",
     "ml_est_spca_energy",

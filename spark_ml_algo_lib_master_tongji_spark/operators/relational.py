@@ -819,7 +819,7 @@ def q_events_retention_cohorts(cat: Catalog) -> DataFrame:
     )
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "q1_pricing_summary",
     "q6_forecast_revenue",

@@ -135,7 +135,7 @@ def sim_lsh_bucket_pairs(
     return lsh_candidate_pairs(emb, n_planes, threshold)
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "sim_brute_force_topk",
     "sim_lsh_bucket_pairs",

@@ -118,7 +118,7 @@ def ml_simrank(cat: Catalog) -> DataFrame:
     return simrank(cat)
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "ml_simrank",
 )

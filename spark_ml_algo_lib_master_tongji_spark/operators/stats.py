@@ -682,7 +682,7 @@ def stat_chi_square(cat: Catalog) -> DataFrame:
     )
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "stat_pearson_lineitem",
     "stat_spearman_lineitem",

@@ -949,7 +949,7 @@ def pipeline_lm_perplexity(cat: Catalog) -> DataFrame:
     )
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 #: explicit read schema for the staged documents JSONL export — a LITERAL,
 #: not derived from the parquet footer at runtime, because the production
 #: contract is "the loader KNOWS its schema": schemaless JSONL reads run a

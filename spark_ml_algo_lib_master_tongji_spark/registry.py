@@ -4,30 +4,36 @@ Single source of truth for the driver contract (``__spark_entry__.queries``)
 and the pytest differential suite. Every operator claimed in SURVEY.md §2
 appears here; SQL-expressible ones have a matching oracle in ``oracles.py``.
 
-Ordering contract
------------------
+Ordering
+--------
 The round driver value-checks only the FIRST ``DRIVER_WINDOW`` (50) registry
-entries against their DuckDB oracles; later entries get at most a rows-only
-check. With 140 declared oracles the window cannot hold all of them in one
-round, so the order below is a priority queue, not an accident:
+entries against their DuckDB oracles, and an oracle goes stale when it has
+no green (``hash_match``) row in the last ``STALE_AFTER`` rounds. The order
+is derived from the committed ``CORRECTNESS_r*.json`` artifacts, never kept
+by hand. ``build_registry`` sorts by:
 
-1. oracles that have never received a driver CORRECTNESS row (round-1
-   positions 51+), plus oracles whose *implementation changed this round* —
-   these need (re-)verification most;
-2. re-verification fills: Pregel-loop queries affected by this round's
-   join-strategy change, until the window is full;
-3. everything already driver-green and unchanged, then the no-oracle
-   estimator workloads (pytest-verified only) at the back.
+1. oracles never green, then oracles at or past the staleness bound for
+   the upcoming round, oldest green first (never green counts as oldest);
+2. ``CHANGED``: rows whose computation the current change rewrites;
+3. every other oracle, oldest green first;
+4. queries without an oracle, last.
 
-Rotating previously-green, unchanged queries to the back is safe: each keeps
-its pytest differential test (tests/ compares the same oracle SQL via DuckDB
-in-process), so a regression still fails CI even when the driver window
-doesn't reach it.
+Ties break by name. Overflow rule: when more than ``DRIVER_WINDOW`` oracles
+are obligated (tier 1), the oldest take the window and the rest fall just
+behind it, where ``tools/rotation_audit.py`` reports them in
+``missing_from_window`` — nothing is dropped silently.
+
+``declared_queries`` keeps module declaration order; ``bench.py`` runs in
+that fixed order so its per-query load attribution does not move when the
+window rotates.
 """
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,6 +57,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 #: how many leading registry entries the round driver value-checks.
 DRIVER_WINDOW = 50
+#: rounds an oracle may go without a green CORRECTNESS row.
+STALE_AFTER = 3
+#: rows whose computation the current change rewrites; they follow the
+#: obligated oracles into the window. Empty unless a change needs it.
+CHANGED: tuple[str, ...] = ()
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _wrap(fn: Callable[[Catalog], DataFrame]) -> QueryFn:
@@ -60,8 +73,9 @@ def _wrap(fn: Callable[[Catalog], DataFrame]) -> QueryFn:
     return run
 
 
-def _module_queries() -> dict[str, QueryFn]:
-    """name → wrapped callable for every registered query, unordered."""
+def declared_queries() -> dict[str, QueryFn]:
+    """name → wrapped callable for every registered query, in module
+    declaration order."""
     from spark_ml_algo_lib_master_tongji_spark.multimodal import media
     from spark_ml_algo_lib_master_tongji_spark.operators import ml_extra
     from spark_ml_algo_lib_master_tongji_spark.streaming import pipeline
@@ -91,239 +105,47 @@ def _module_queries() -> dict[str, QueryFn]:
     return out
 
 
-#: Priority order, round 15 rotation (148 oracles / 176 queries). The
-#: staleness contract is the binding constraint this round: ALL 48
-#: round-12-green rows sit exactly at the 3-round bound
-#: (tools/rotation_audit.py), leaving 2 slack slots in the 50-row
-#: window. Round 14 rewrote the computation path of 7 oracle rows that
-#: were NOT in its window (RowMatrix/derived-Pearson arms, simrank
-#: co-scheduling, the dbscan grouped-HLL gate) — r14 verdict item 1.
-#: The 2 slack slots go to the most semantics-sensitive pair of those,
-#: the covariance→Pearson derivation rewrite (ml_est_covariance,
-#: ml_est_pearson_rdd); the remaining 5 (ml_est_svd_energy, ml_simrank,
-#: ml_dbscan, ml_dbscan_summary, ml_dbscan_grid_neighbors) are
-#: r13-green, hit their OWN bound at r16, and head the r16 window by
-#: construction below (their cohort, minus the pair promoted here, is
-#: the next block behind the boundary). Until then they are covered by
-#: this round's window-blind driver_sim runs (148/148 MATCH) and their
-#: pytest differentials. Round-15 changed rows: the clf anchor
-#: (pipeline-internal restructure, scalar proven bit-identical) and
-#: reg anchor (submission order only) sit IN the bound cohort below;
-#: node2vec_embeddings (lever default = old behavior) likewise;
-#: ml_est_als_rdd (pinned sample) has no oracle — tier 3.
-_ORDER: tuple[str, ...] = (
-    # -- tier 1: r14-changed rows promoted into the slack slots ----------
-    "ml_est_covariance",
-    "ml_est_pearson_rdd",
-    # -- tier 2: the 48 round-12-green rows AT the staleness bound --------
-    "q_case_conditional_agg",
-    "q_events_retention_cohorts",
-    "stat_approx_quantile_accuracy",
-    "stat_welch_ttest",
-    "q_funnel_conversion",
-    "sim_ivf_delta_search",
-    "q_sort_limit_top_orders",
-    "q_grouped_having",
-    "stat_summary_lineitem",
-    "text_token_stats",
-    "text_quality_score",
-    "text_lang_id",
-    "stat_spearman_lineitem",
-    "q_sql_entry_top_suppliers",
-    "q_events_first_per_user",
-    "q_events_type_rollup",
-    "q_string_id_dictionary",
-    "ml_idf",
-    "ml_prefixspan",
-    "ml_est_prefixspan",
-    "text_winnow_fingerprints",
-    "ml_est_clf_acc_anchors",
-    "ml_est_reg_rmse_anchors",
-    "ml_est_spca_energy",
-    "text_bpe_token_stats",
-    "graph_node2vec_embeddings",
-    "pipeline_training_mix",
-    "graph_cycle_detection",
-    "graph_maximal_cliques",
-    "graph_subgraph_matching",
-    "dedup_embedding_cosine_lsh",
-    "sim_lsh_bucket_pairs",
-    "ml_knn_classifier",
-    "ml_knn_regressor",
-    "stream_windowed_counts",
-    "stream_distinct_pairs",
-    "stream_sessionization",
-    "stream_user_totals_stateful",
-    "stream_nation_event_revenue",
-    "mm_manifest",
-    "mm_frame_sample",
-    "mm_byte_features",
-    "mm_fake_decode",
-    "graph_node2vec_walks",
-    "graph_node2vec_biased_walks",
-    "graph_trustrank",
-    "graph_ppr_multi",
-    "graph_closeness_nation",
-    # ---------------------------- window boundary (50) ---------------------
-    # -- round-13-green cohort (bound hits r16; heads the r16 window
-    #    together with the 5 remaining r14-changed rows listed above) ------
-    "stat_hll_accuracy",
-    "stat_value_histogram",
-    "stat_group_distinct",
-    "stat_chi_square",
-    "dedup_delta",
-    "dedup_index_stats",
-    "ml_est_als_rec_topk",
-    "pipeline_global_shuffle",
-    "ml_est_logreg_acc",
-    "ml_est_als_mse",
-    "ml_linreg_ols",
-    "text_fingerprint",
-    "graph_scc_nation",
-    "text_top_ngrams",
-    "text_lang_rollup",
-    "pipeline_stratified_sample",
-    "pipeline_decontaminate",
-    "graph_edges",
-    "graph_degrees",
-    "q_skew_salted_user_counts",
-    "ml_dbscan",
-    "ml_dbscan_summary",
-    "ml_dbscan_grid_neighbors",
-    "ml_kmeans_lloyd_assign",
-    "ml_kmeans_lloyd_sizes",
-    "pipeline_semantic_dedup",
-    "ml_est_idf",
-    "ml_est_svd_energy",
-    "graph_triangle_count",
-    "q1_pricing_summary",
-    "q3_top_unshipped_orders",
-    "q6_forecast_revenue",
-    "q_broadcast_dim_join",
-    "q_anti_join_customers_without_orders",
-    "q_semi_join_suppliers_with_big_lineitems",
-    "stat_covariance_lineitem",
-    "stat_pearson_lineitem",
-    "dedup_minhash_lsh",
-    "dedup_minhash_groups",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_ngram_jaccard",
-    "sim_brute_force_topk",
-    "graph_degrees_nation",
-    "graph_weak_cliques",
-    "graph_incremental_pagerank",
-    "ml_simrank",
-    "graph_pagerank",
-    # -- round-14/15-green rows (the r14 window + tier-1 rows; bound r17) --
-    "ml_est_lda_ppx",
-    "stat_freq_histogram",
-    "q_funnel_ttc",
-    "text_gopher_rules",
-    "pipeline_profile_columns",
-    "pipeline_profile_quantiles",
-    "pipeline_jsonl_roundtrip",
-    "ml_knn_spilltree",
-    "ml_knn_spilltree_classifier",
-    "sim_ivf_recall",
-    "graph_betweenness_overlap",
-    "stream_stream_join",
-    "dedup_substring_spans",
-    "pipeline_span_removal",
-    "q_asof_join_click_attribution",
-    "q_range_join_value_tiers",
-    "q_rollup_revenue",
-    "q_pivot_event_types",
-    "q_resample_gapfill",
-    "q_moving_average",
-    "graph_connected_components",
-    "graph_mssp",
-    "graph_bfs",
-    "graph_sssp",
-    "graph_label_propagation",
-    "graph_kcore",
-    "graph_pagerank_personalized",
-    "graph_pagerank_weighted",
-    "dedup_embedding_cosine",
-    "graph_clustering_coefficient",
-    "graph_betweenness",
-    "graph_louvain",
-    "graph_modularity",
-    "dedup_exact",
-    "pipeline_sequence_pack",
-    "pipeline_doc_chunks",
-    "text_repetition_3gram",
-    "pipeline_domain_mix",
-    "text_tfidf_top_terms",
-    "pipeline_vocab_prune",
-    "pipeline_quality_filter",
-    "pipeline_pii_scrub",
-    "ml_est_pca_energy",
-    "pipeline_chunk_dedup",
-    "dedup_winnow_pairs",
-    "ml_est_kmeans_wssse",
-    "ml_est_linreg_rmse",
-    "pipeline_lm_perplexity",
-    "q_union_distinct_nations",
-    "q_topk_per_group",
-    # -- tier 3: no-oracle workloads (pytest-verified) ----------------------
-    "ml_est_kmeans",
-    "ml_est_kmeans_rdd",
-    "ml_est_lda",
-    "ml_est_logreg",
-    "ml_est_logreg_bounded",
-    "ml_est_svc",
-    "ml_est_dt_classifier",
-    "ml_est_rf_classifier",
-    "ml_est_gbt_classifier",
-    "ml_est_linreg",
-    "ml_est_dt_regressor",
-    "ml_est_rf_regressor",
-    "ml_est_gbt_regressor",
-    "ml_est_pca",
-    "ml_est_svd",
-    "ml_est_als",
-    "ml_est_als_implicit",
-    "ml_est_als_recommend",
-    "ml_est_gbt_pipeline",
-    "ml_est_pca_sparse",
-    "ml_est_xgboost",
-    "sim_ivf_topk",
-    "graph_betweenness_sampled",
-    "ml_est_dt_rdd",
-    "ml_est_gbdt_rdd",
-    "ml_est_als_rdd",
-    "ml_est_lda_rdd",
-    "ml_est_pca_rdd",
-)
-
-# The first DRIVER_WINDOW names must exactly fill the driver's value-check
-# window; a drifted prefix silently wastes verification slots.
-assert len(_ORDER) >= DRIVER_WINDOW
-assert _ORDER[DRIVER_WINDOW - 1] == "graph_closeness_nation", (
-    "tier-1/2 prefix no longer ends at the driver window boundary"
-)
+def freshest_green(repo: Path = REPO) -> tuple[dict[str, int], int]:
+    """oracle → latest round with a hash_match row; plus the upcoming
+    round number (max committed CORRECTNESS round + 1)."""
+    latest: dict[str, int] = {}
+    rounds = []
+    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p.name)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        rounds.append(rnd)
+        try:
+            doc = json.loads(p.read_text())
+        except Exception:  # noqa: BLE001 — a corrupt artifact isn't evidence
+            continue
+        for name, row in doc.items():
+            if isinstance(row, dict) and row.get("hash_match"):
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest, (max(rounds) + 1 if rounds else 1)
 
 
-def build_registry() -> dict[str, QueryFn]:
-    """Ordered registry. Missing names (ordered but unimplemented) raise;
-    extra names (implemented but not yet prioritized) are appended at the
-    back with a warning — order drift degrades priority, never availability.
-    """
-    all_queries = _module_queries()
-    missing = [n for n in _ORDER if n not in all_queries]
-    if missing:  # a name we promised the driver no longer exists: fail loudly
-        raise RuntimeError(f"registry order drift: missing={missing}")
-    extra = [n for n in all_queries if n not in _ORDER]
-    if extra:
-        import warnings
+def build_registry(repo: Path = REPO) -> dict[str, QueryFn]:
+    """Registry in driver-priority order (module docstring), derived from
+    the CORRECTNESS artifacts under ``repo``."""
+    from spark_ml_algo_lib_master_tongji_spark.oracles import all_oracles
 
-        warnings.warn(
-            f"registry order drift: {len(extra)} unordered queries appended "
-            f"at the back: {extra}",
-            stacklevel=2,
-        )
-    out = {name: all_queries[name] for name in _ORDER}
-    for name in extra:
-        out[name] = all_queries[name]
-    return out
+    queries = declared_queries()
+    unknown = sorted(set(CHANGED) - set(queries))
+    if unknown:
+        raise ValueError(f"CHANGED names no registered query: {unknown}")
+    oracles = set(all_oracles())
+    latest, upcoming = freshest_green(repo)
+
+    def key(name: str) -> tuple[int, int, str]:
+        green = latest.get(name, 0)  # never green sorts as oldest
+        if name in oracles and green <= upcoming - STALE_AFTER:
+            return 0, green, name
+        if name in CHANGED:
+            return 1, 0, name
+        if name in oracles:
+            return 2, green, name
+        return 3, 0, name
+
+    return {name: queries[name] for name in sorted(queries, key=key)}

@@ -344,7 +344,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("stream_stream_join")
 
 
-#: registry-exported query names (ordering lives in registry._ORDER)
+#: registry-exported query names (order derived in registry.build_registry)
 QUERIES = (
     "stream_windowed_counts",
     "stream_distinct_pairs",

@@ -29,22 +29,29 @@ def _norm_rows(cols, rows):
     return out
 
 
-def assert_match(sdf, duck, sql: str, name: str = "") -> None:
-    spark_cols = list(sdf.columns)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(sql)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
+def mismatch(scols, srows, dcols, drows) -> str | None:
+    """The driver's verdict on a Spark result vs a DuckDB result: None when
+    they match, else one line naming the first difference."""
+    if sorted(scols) != sorted(dcols):
+        return f"SCHEMA MISMATCH spark={sorted(scols)} duck={sorted(dcols)}"
+    if len(srows) != len(drows):
+        return f"ROWCOUNT MISMATCH spark={len(srows)} duck={len(drows)}"
+    ns, nd = _norm_rows(scols, srows), _norm_rows(dcols, drows)
+    bad = [i for i, (a, b) in enumerate(zip(ns, nd)) if a != b]
+    if bad:
+        return (
+            f"VALUE MISMATCH n={len(bad)} first: spark={ns[bad[0]]} "
+            f"duck={nd[bad[0]]}"
+        )
+    return None
 
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
+
+def assert_match(sdf, duck, sql: str, name: str = "") -> None:
+    res = duck.execute(sql)
+    verdict = mismatch(
+        list(sdf.columns),
+        [tuple(r) for r in sdf.collect()],
+        [d[0] for d in res.description],
+        res.fetchall(),
     )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    ns, nd = _norm_rows(spark_cols, spark_rows), _norm_rows(duck_cols, duck_rows)
-    mism = [i for i, (a, b) in enumerate(zip(ns, nd)) if a != b]
-    assert not mism, (
-        f"{name}: value mismatch at sorted-row {mism[:3]}: "
-        f"spark={ns[mism[0]]} duck={nd[mism[0]]}"
-    )
+    assert verdict is None, f"{name}: {verdict}"

@@ -11,7 +11,7 @@ sys.path.insert(0, str(REPO))
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 #: repo-local 10× fixture (tools/scale_testdata.py output) — the scale-regime
-#: fixture shared by the sweep-marked tests and the tools/ A/B scripts.
+#: fixture shared by the sweep-marked tests and the scale tools.
 SF_10X = str(REPO / "testdata_sf1m")
 
 

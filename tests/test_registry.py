@@ -1,50 +1,92 @@
 """Registry contract tests — no SparkSession needed, so these run in <1s.
 
-Round-2 lesson: five queries added to a module's QUERIES but not to
-``registry._ORDER`` made ``build_registry()`` raise, which zeroed the entire
-round's driver artifacts. These tests make that class of drift fail in CI
-immediately, and pin the tolerant-extras behavior.
+The registry order is derived from the committed CORRECTNESS_r*.json
+artifacts (``registry.build_registry``); these tests pin that derivation on
+synthetic artifacts and check the committed window against the staleness
+contract.
 """
 
 from __future__ import annotations
 
-import warnings
+import json
 
 import pytest
 
 from spark_ml_algo_lib_master_tongji_spark import registry
 from spark_ml_algo_lib_master_tongji_spark.registry import (
     DRIVER_WINDOW,
-    _ORDER,
     build_registry,
 )
 
 
+def _write_rounds(root, rounds: dict[int, list[str]]) -> None:
+    """One CORRECTNESS_r{N}.json per round, with a green row per name."""
+    green = {"hash_match": True}
+    for rnd, names in rounds.items():
+        (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({n: green for n in names})
+        )
+
+
 def test_build_registry_succeeds_and_is_ordered():
+    """Against the committed artifacts the registry builds, holds every
+    declared query exactly once, and sorts by the derivation key: every
+    oracle ahead of every no-oracle query, with the window full of
+    oracles."""
+    from spark_ml_algo_lib_master_tongji_spark.oracles import all_oracles
+
     reg = build_registry()
-    assert list(reg)[: len(_ORDER)] == list(_ORDER)
+    declared = registry.declared_queries()
+    assert sorted(reg) == sorted(declared)
     assert len(reg) == len(set(reg)) >= DRIVER_WINDOW
-
-
-def test_no_unordered_extras_at_head():
-    """Extras are tolerated at runtime but should never ship: fail CI."""
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        build_registry()  # would raise UserWarning if any extras exist
+    oracles = set(all_oracles())
+    is_oracle = [name in oracles for name in reg]
+    assert is_oracle == sorted(is_oracle, reverse=True)
+    assert all(is_oracle[:DRIVER_WINDOW])
 
 
 def test_missing_ordered_name_raises(monkeypatch):
-    monkeypatch.setattr(registry, "_ORDER", (*_ORDER, "no_such_query"))
-    with pytest.raises(RuntimeError, match="missing=\\['no_such_query'\\]"):
+    """A hand-named priority row (``CHANGED``) that no module registers
+    must fail loudly instead of silently dropping out of the window."""
+    monkeypatch.setattr(registry, "CHANGED", ("no_such_query",))
+    with pytest.raises(ValueError, match="no_such_query"):
         build_registry()
 
 
-def test_extra_query_appends_with_warning(monkeypatch):
-    """An implemented-but-unordered query degrades priority, not availability."""
-    monkeypatch.setattr(registry, "_ORDER", _ORDER[:-1])
-    with pytest.warns(UserWarning, match="unordered queries appended"):
-        reg = build_registry()
-    assert list(reg)[-1] == _ORDER[-1]  # still present, at the back
+def test_order_derives_from_correctness_artifacts(tmp_path, monkeypatch):
+    """Upcoming round 6 (bound round 3): never-green first, then stale and
+    at-bound oracles oldest green first, then CHANGED, then the remaining
+    oracles oldest green first, then no-oracle queries; ties by name. With
+    every oracle obligated, the window overflows and the audit names the
+    excess."""
+    from spark_ml_algo_lib_master_tongji_spark.oracles import all_oracles
+    from tools.rotation_audit import audit
+
+    oracles = sorted(all_oracles())
+    # names picked against the grain: the key, not the name, must decide
+    stale, never, bound_a, bound_b, changed, *rest, older = oracles
+    _write_rounds(
+        tmp_path,
+        {1: [stale], 3: [bound_a, bound_b], 4: [older], 5: [changed, *rest]},
+    )
+    monkeypatch.setattr(registry, "CHANGED", (changed,))
+    order = list(build_registry(tmp_path))
+    no_oracle = sorted(set(order) - set(oracles))
+    assert order == [
+        never, stale, bound_a, bound_b, changed, older, *rest, *no_oracle
+    ]
+    a = audit(tmp_path)
+    assert (a["never_green"], a["already_stale"]) == ([never], [stale])
+    assert a["at_bound"] == [bound_a, bound_b]
+    assert not a["missing_from_window"]
+
+    overflow = tmp_path / "overflow"
+    overflow.mkdir()
+    _write_rounds(overflow, {5: []})  # upcoming round 6, nothing green
+    monkeypatch.setattr(registry, "CHANGED", ())
+    a = audit(overflow)
+    assert a["obligated"] == len(oracles) > DRIVER_WINDOW
+    assert a["missing_from_window"] == oracles[DRIVER_WINDOW:]
 
 
 def test_every_oracle_has_a_query():
@@ -120,34 +162,18 @@ def test_window_covers_every_staleness_obligation():
 
 
 def test_rotation_audit_detects_staleness(tmp_path):
-    """The audit must actually FIRE: synthesize CORRECTNESS artifacts
-    where one real oracle was last green 4 rounds before the upcoming
-    round (stale) and another exactly 3 back but outside the window
-    (missed obligation) — both must be flagged."""
-    import json
-
-    from spark_ml_algo_lib_master_tongji_spark.registry import (
-        DRIVER_WINDOW,
-        _ORDER,
-    )
+    """The audit must actually FIRE: synthesize CORRECTNESS artifacts where
+    one real oracle was last green 5 rounds before the upcoming round
+    (stale) and every other oracle is fresh — the stale one must be
+    flagged, and the derived order must put it at the head of the window."""
+    from spark_ml_algo_lib_master_tongji_spark.oracles import all_oracles
     from tools.rotation_audit import audit
 
-    in_window = _ORDER[0]
-    outside = next(
-        n for n in _ORDER[DRIVER_WINDOW:] if not n.startswith("ml_est_")
-    )
-    green = {"hash_match": True}
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({in_window: green, outside: green})
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text(
-        json.dumps({outside: green})
-    )
-    (tmp_path / "CORRECTNESS_r05.json").write_text(json.dumps({}))
+    *fresh, target = sorted(all_oracles())
+    _write_rounds(tmp_path, {1: [target], 5: fresh})
     a = audit(tmp_path)
-    # upcoming round = 6: r01 green is stale (1 < 6-3); r03 green sits
-    # exactly AT the bound (3 == 6-3) but `outside` is not in the window
+    # upcoming round = 6: r01 green is stale (1 < 6-3)
     assert a["upcoming_round"] == 6
-    assert in_window in a["already_stale"]
-    assert outside in a["at_bound"]
-    assert outside in a["missing_from_window"]
+    assert a["already_stale"] == [target]
+    assert list(build_registry(tmp_path))[0] == target
+    assert not a["missing_from_window"]

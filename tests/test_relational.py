@@ -10,43 +10,22 @@ from tests.conftest import SF_ORACLE
 
 
 def _registry_pairs():
-    """(name, query, oracle) triples; oracles OUTSIDE the current driver
-    window carry the ``sweep`` marker (round-13 budget split, BASELINE.md):
-    the per-push suite compares the ~50 in-window oracles — the rows this
-    round is actually changing/re-verifying — and the full 146-oracle
-    differential runs once per round via ``-m sweep`` (PLUS every round's
-    ``tools/driver_sim.py``, which value-checks ALL oracles regardless of
-    window). Out-of-window regressions therefore still surface within the
-    round, just not on every push."""
+    """(name, query, oracle) triples for EVERY oracle, per push. The
+    driver value-compares only its 50-row window; the suite compares all
+    oracles so its coverage does not depend on which rows the window
+    holds."""
     from spark_ml_algo_lib_master_tongji_spark.oracles import all_oracles
-    from spark_ml_algo_lib_master_tongji_spark.registry import (
-        DRIVER_WINDOW,
-        _ORDER,
-        build_registry,
-    )
+    from spark_ml_algo_lib_master_tongji_spark.registry import build_registry
 
     reg = build_registry()
     oracles = all_oracles()
     # every oracle key must exist in the registry
     missing = set(oracles) - set(reg)
     assert not missing, f"oracles without queries: {missing}"
-    window = set(_ORDER[:DRIVER_WINDOW])
-    return [
-        pytest.param(
-            k,
-            reg[k],
-            oracles[k],
-            marks=() if k in window else (pytest.mark.sweep,),
-        )
-        for k in sorted(oracles)
-    ]
+    return [pytest.param(k, reg[k], oracles[k], id=k) for k in sorted(oracles)]
 
 
-@pytest.mark.parametrize(
-    "name,fn,sql",
-    _registry_pairs(),
-    ids=[p.values[0] for p in _registry_pairs()],
-)
+@pytest.mark.parametrize("name,fn,sql", _registry_pairs())
 def test_oracle_match(spark, duck, name, fn, sql):
     sdf = fn(spark, SF_ORACLE)
     assert_match(sdf, duck, sql, name)

@@ -11,7 +11,7 @@ number that actually predicts 100 TB behavior. This tool:
 1. reads the committed sf0.1 artifact (default BENCH_LOCAL_LAST.json),
 2. picks the TOP_N queries by cost (wall − load attribution),
 3. re-times those queries at BOTH sf0.1 and the sf1 fixture in one session
-   (bench.py's materialize protocol, registry order so session-shared
+   (bench.py's timing core and run order, so session-shared
    derivations attribute to loads exactly like the full bench),
 4. writes BENCH_SF1_SLICE.json: per-query sf0.1 cost, sf1 cost, and the
    decade ratio (sf1/sf0.1 at 10× data — ~1× fixed-overhead, ~10× linear,
@@ -26,7 +26,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -48,9 +48,9 @@ def run_subset(
     way, so rep choice does not move cost attribution. All reps are
     recorded (``cost_reps``) so the spread stays visible."""
     from spark_ml_algo_lib_master_tongji_spark import benchlib
-    from spark_ml_algo_lib_master_tongji_spark.registry import build_registry
+    from spark_ml_algo_lib_master_tongji_spark.registry import declared_queries
 
-    reg = build_registry()
+    reg = declared_queries()
     out: dict[str, dict] = {}
     wanted = set(names)
     unknown = wanted - set(reg)
@@ -61,18 +61,16 @@ def run_subset(
             f"{sorted(unknown)}",
             file=sys.stderr,
         )
-    for name in (n for n in reg if n in wanted):  # registry order
+    for name in (n for n in reg if n in wanted):  # bench.py's run order
         attempts: list[dict] = []
         for _ in range(max(reps, 1)):
-            load0 = benchlib.load_seconds()
-            t0 = time.perf_counter()
             try:
-                n_rows = benchlib.materialize(reg[name](spark, sf_dir))
+                wall, load, n_rows, _ = benchlib.timed_run(
+                    partial(reg[name], spark, sf_dir)
+                )
             except Exception as exc:  # noqa: BLE001 — one bad query, one entry
                 attempts = [{"error": f"{type(exc).__name__}: {exc}"[:200]}]
                 break
-            wall = time.perf_counter() - t0
-            load = benchlib.load_seconds() - load0
             attempts.append(
                 {
                     "wall": round(wall, 2),

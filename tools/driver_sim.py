@@ -4,44 +4,26 @@ Creates a *plain* SparkSession (not the engine's tuned factory — the driver
 won't use it either), then: (1) smoke-runs entry(spark) on sf0.001,
 (2) runs every queries() entry at sf0.01, (3) runs the matching oracle_sql()
 on DuckDB over the same parquet, (4) compares row count + sorted column names
-+ order-insensitive values. Prints a per-query verdict line and exits nonzero
-on any mismatch.
++ order-insensitive values (``tests/compare.mismatch``, the comparator the
+pytest differentials assert on). Prints a per-query verdict line and exits
+nonzero on any mismatch.
+
+Usage: python tools/driver_sim.py [name ...]   (default: every query)
 """
 
 from __future__ import annotations
 
-import math
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-SF_SMOKE = "/root/testdata/sf0.001"
+from tests.compare import mismatch  # noqa: E402
+
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
-def norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9) + 0.0
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(norm_cell(x) for x in v)
-    return v
-
-
-def norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
-    out.sort(key=repr)
-    return out
-
-
-def main() -> int:
+def main(names: list[str]) -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
@@ -74,6 +56,8 @@ def main() -> int:
     if extra:
         print(f"FATAL: oracle keys missing from queries(): {extra}")
         return 1
+    if names:
+        qs = {n: qs[n] for n in names}
 
     failed = []
     for name, fn in qs.items():
@@ -89,30 +73,19 @@ def main() -> int:
             print(f"{name}: rows-only rows={len(srows)} cols={scols}")
             continue
         res = con.execute(oracles[name])
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-        if sorted(scols) != sorted(dcols):
-            print(f"{name}: SCHEMA MISMATCH spark={sorted(scols)} duck={sorted(dcols)}")
-            failed.append(name)
-            continue
-        if len(srows) != len(drows):
-            print(f"{name}: ROWCOUNT MISMATCH spark={len(srows)} duck={len(drows)}")
-            failed.append(name)
-            continue
-        ns, nd = norm_rows(scols, srows), norm_rows(dcols, drows)
-        bad = [i for i, (a, b) in enumerate(zip(ns, nd)) if a != b]
-        if bad:
-            print(
-                f"{name}: VALUE MISMATCH n={len(bad)} first: spark={ns[bad[0]]} "
-                f"duck={nd[bad[0]]}"
-            )
+        verdict = mismatch(
+            scols, srows, [d[0] for d in res.description], res.fetchall()
+        )
+        if verdict:
+            print(f"{name}: {verdict}")
             failed.append(name)
         else:
             print(f"{name}: MATCH rows={len(srows)}")
 
-    print(f"\n{len(qs) - len(failed)}/{len(qs)} ok; oracle-checked={len(oracles)}")
+    checked = sum(1 for n in qs if n in oracles)
+    print(f"\n{len(qs) - len(failed)}/{len(qs)} ok; oracle-checked={checked}")
     return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

@@ -1,6 +1,5 @@
 """Rotation audit: recompute the driver-window staleness state from the
-committed CORRECTNESS_r*.json files and check the CURRENT registry window
-against it — the bookkeeping the round judges have been redoing by hand.
+committed CORRECTNESS_r*.json files and check the registry window against it.
 
 Contract (registry.py): the driver value-checks only the first
 ``DRIVER_WINDOW`` registry entries each round; an oracle goes STALE if it
@@ -10,58 +9,38 @@ upcoming round's window MUST contain
   (b) every oracle whose freshest green is exactly 3 rounds old
       (at the staleness bound — one more miss and it's stale).
 
-This tool prints the freshest-green census, the upcoming round's
-obligations, whether the current ``_ORDER`` prefix satisfies them, and the
-NEXT round's projected cohort (so the registry comments can plan it).
-Exit 1 if any obligated oracle is missing from the window.
+The registry order is derived from the same artifacts, so the window holds
+these by construction unless they outnumber it (the registry's overflow
+rule). This tool prints the freshest-green census, the upcoming round's
+obligations, any obligated oracle the window cannot hold, and the NEXT
+round's projected cohort. Exit 1 if any obligated oracle is missing from
+the window.
 
-Usage: python tools/rotation_audit.py   (no Spark session needed — <1s)
+Usage: python tools/rotation_audit.py   (no Spark session needed)
 """
 
 from __future__ import annotations
 
-import json
-import re
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-REPO = Path(__file__).resolve().parent.parent
-STALE_AFTER = 3  # rounds without a green row
-
-
-def freshest_green(repo: Path = REPO) -> tuple[dict[str, int], int]:
-    """oracle → latest round with a hash_match row; plus the upcoming
-    round number (max committed CORRECTNESS round + 1)."""
-    latest: dict[str, int] = {}
-    rounds = []
-    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        rounds.append(rnd)
-        try:
-            doc = json.loads(p.read_text())
-        except Exception:  # noqa: BLE001 — a corrupt artifact isn't evidence
-            continue
-        for name, row in doc.items():
-            if isinstance(row, dict) and row.get("hash_match"):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest, (max(rounds) + 1 if rounds else 1)
+from spark_ml_algo_lib_master_tongji_spark.registry import (  # noqa: E402
+    DRIVER_WINDOW,
+    REPO,
+    STALE_AFTER,
+    build_registry,
+    freshest_green,
+)
 
 
 def audit(repo: Path = REPO) -> dict:
     from spark_ml_algo_lib_master_tongji_spark.oracles import all_oracles
-    from spark_ml_algo_lib_master_tongji_spark.registry import (
-        DRIVER_WINDOW,
-        _ORDER,
-    )
 
     latest, upcoming = freshest_green(repo)
     oracles = set(all_oracles())
-    window = set(_ORDER[:DRIVER_WINDOW])
+    window = set(list(build_registry(repo))[:DRIVER_WINDOW])
 
     never_green = sorted(oracles - set(latest))
     at_bound = sorted(

@@ -11,8 +11,9 @@ lifecycle for any registry query:
 - executes ``queries()[NAME]`` on a fresh session at ``--sf-dir``
   (default /root/testdata/sf0.1);
 - ``--out`` saves the full result as parquet (the sink IS the
-  materialization — no separate count pass); without it the result is
-  materialized via the bench persist-then-count protocol;
+  materialization; the timed count then reads the saved file back);
+  without it the result is materialized via the bench persist-then-count
+  protocol;
 - writes ``report/<NAME>_<ts>.yml`` with params, loadDataTime (session-
   shared derivation builds first-touched by this run), costTime, and the
   row count, and prints the reference's ``Exec Successful`` line.
@@ -23,7 +24,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -49,16 +49,14 @@ def main() -> None:
     spark = get_session(app_name=f"run_{args.name}")
     spark.read.parquet(os.path.join(args.sf_dir, "lineitem.parquet")).count()
 
-    load0 = benchlib.load_seconds()
-    t0 = time.perf_counter()
-    df = reg[args.name](spark, args.sf_dir)
-    if args.out:
+    def query():
+        df = reg[args.name](spark, args.sf_dir)
+        if not args.out:
+            return df
         df.write.mode("overwrite").parquet(args.out)
-        n = spark.read.parquet(args.out).count()
-    else:
-        n = benchlib.materialize(df)
-    wall = time.perf_counter() - t0
-    load = benchlib.load_seconds() - load0
+        return spark.read.parquet(args.out)
+
+    wall, load, n, _ = benchlib.timed_run(query)
 
     path = write_run_report(
         args.name,

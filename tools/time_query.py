@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 import sys
-import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -41,12 +41,7 @@ def main() -> None:
     for name in args:
         fn = reg[name]
         for r in range(runs):
-            load0 = benchlib.load_seconds()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = benchlib.materialize(df)
-            dt = time.perf_counter() - t0
-            load = benchlib.load_seconds() - load0
+            dt, load, n, _ = benchlib.timed_run(partial(fn, spark, sf_dir))
             print(
                 f"{name} run{r}: {dt:.3f}s (load {load:.2f}s, "
                 f"cost {dt - load:.2f}s) rows={n}",
