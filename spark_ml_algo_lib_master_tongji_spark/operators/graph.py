@@ -11,12 +11,23 @@ merge structure as Pregel's vprog/sendMsg/mergeMsg, but declared through
 Catalyst so each superstep is a shuffled hash/sort-merge join+agg that AQE
 can re-plan at runtime.
 
-**Fixed-iteration semantics.** Every operator here runs a *fixed* number of
-supersteps (matching the reference's ``numIter`` variants, e.g.
-``PageRank.run(graph, numIter)``) rather than convergence detection. That
-makes the result a pure deterministic function of the input — exactly
-reproducible by the unrolled-SQL DuckDB oracles in ``graph_oracles.py`` —
-and avoids a driver-side convergence check per superstep.
+**Fixed-iteration semantics.** Every operator here runs at most a *fixed*
+number of supersteps (matching the reference's ``numIter`` variants, e.g.
+``PageRank.run(graph, numIter)``). Loops with run-to-convergence semantics
+(CC, SSSP, k-core, …) exit early on an unchanged state and raise
+``NotConvergedError`` when the budget ends off a fixed point, so the result
+is a pure deterministic function of the input — exactly reproducible by the
+unrolled-SQL DuckDB oracles in ``graph_oracles.py``.
+
+**CSR kernel arm.** Connected components, label propagation and k-core
+also run as driver-side numpy kernels when the caller passes ``csr=`` (the
+session ``copurchase_csr``, which registry rows pass only while
+``ADJ_BC_MAX_EDGES`` admits the graph — ``copurchase_csr_gated``). The
+kernels run the same synchronous rounds under the same contract
+(``plans.iterative.iterate_local``): below the gate a DataFrame superstep
+is a few Spark jobs of scheduling latency over little data. Triangles,
+subgraph matching and sampled betweenness use the same gated broadcast
+inside Spark tasks.
 
 **Fixture graphs** (derivations are themselves relational operators):
 - *co-purchase graph*: undirected part–part edges, weight = number of times
@@ -30,7 +41,10 @@ same key every round, so executors re-shuffle only the (small) vertex state,
 never the raw fact table. Edges are derived once, projected to (src,dst,w),
 persisted, and reused across supersteps; lineage is truncated every few
 rounds (``plans/iterative``). Skewed high-degree vertices are handled by
-AQE skew-join splitting; nothing here collects rows to the driver.
+AQE skew-join splitting. Only the gated arms collect rows to the driver:
+the CSR kernels (O(|E|) edges, at most ``ADJ_BC_MAX_EDGES``) and the local
+min-plus closure (at most ``TINY_CLOSURE_MAX_EDGES``); above those
+ceilings every operator stays in the DataFrame loops.
 """
 
 from __future__ import annotations
@@ -43,6 +57,7 @@ from spark_ml_algo_lib_master_tongji_spark import benchlib
 from spark_ml_algo_lib_master_tongji_spark.functions.rounding import round_half_up
 from spark_ml_algo_lib_master_tongji_spark.plans.iterative import (
     iterate,
+    iterate_local,
     monotone_sum_probe,
     stat_fixpoint_probe,
 )
@@ -599,10 +614,16 @@ def trustrank(
 # ---- propagation algorithms (§2.3 #6-10,15) --------------------------------
 
 
-def connected_components(edges: DataFrame, n_iter: int = CC_ITERS) -> DataFrame:
+def connected_components(
+    edges: DataFrame, n_iter: int = CC_ITERS, csr=None
+) -> DataFrame:
     """Min-label propagation → (v, label).
     ``ConnectedComponentsRunner.scala:67`` (min-vertex-id component labels);
-    fixed rounds instead of convergence detection."""
+    fixed rounds instead of convergence detection. Pass ``csr`` (a
+    ``csr_broadcast`` of the same graph, gate-admitted) to run the rounds
+    as a driver-side kernel (``_cc_csr_kernel``)."""
+    if csr is not None:
+        return _cc_csr_kernel(edges.sparkSession, csr, n_iter)
     e = _cached(edges.select("src", "dst"))
     verts = _cached(vertices(e))
     n = verts.count()
@@ -794,11 +815,16 @@ def mssp(
     return stacked.where(F.col("dist") < INF)
 
 
-def label_propagation(edges: DataFrame, n_iter: int = LPA_ITERS) -> DataFrame:
+def label_propagation(
+    edges: DataFrame, n_iter: int = LPA_ITERS, csr=None
+) -> DataFrame:
     """Synchronous LPA → (v, label): each round every vertex adopts its
     neighbors' most frequent label, ties broken by smaller label (GraphX
     ``LabelPropagation.run(graph, maxSteps)``,
-    ``LabelPropagationRunner.scala:71``)."""
+    ``LabelPropagationRunner.scala:71``). Pass ``csr`` to run the rounds
+    as a driver-side kernel (``_lpa_csr_kernel``)."""
+    if csr is not None:
+        return _lpa_csr_kernel(edges.sparkSession, csr, n_iter)
     e = _cached(edges.select("src", "dst"))
     verts = _cached(vertices(e))
     n = verts.count()
@@ -829,11 +855,16 @@ def label_propagation(edges: DataFrame, n_iter: int = LPA_ITERS) -> DataFrame:
     return iterate(state0, step, n_iter)
 
 
-def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
+def kcore(
+    edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS, csr=None
+) -> DataFrame:
     """k-core peel → (v, deg): repeatedly drop vertices with degree < k in
     the remaining subgraph; output survivors with their final subgraph
     degree. The Pregel peel loop of ``KcoreMain.scala:43-77,113-128``
-    expressed as join-filter rounds."""
+    expressed as join-filter rounds. Pass ``csr`` to run the peel as a
+    driver-side kernel (``_kcore_csr_kernel``)."""
+    if csr is not None:
+        return _kcore_csr_kernel(edges.sparkSession, csr, k, rounds)
     e = _cached(edges.select("src", "dst"))
     state0 = _cached(vertices(e))
     n = state0.count()
@@ -864,6 +895,117 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
         .groupBy(F.col("src").alias("v"))
         .agg(F.count(F.lit(1)).alias("deg"))
     )
+
+
+# ---- CSR kernel arm of the propagation loops --------------------------------
+#
+# Below ``ADJ_BC_MAX_EDGES`` the driver already holds the graph as CSR arrays
+# (``copurchase_csr``). At that size each DataFrame superstep is a few Spark
+# jobs of scheduling latency around very little data, so the kernels below
+# run the identical synchronous rounds in numpy under ``iterate_local`` (the
+# same budget, early exit and convergence guard as ``iterate``) and ship one
+# result frame. Only the vertices with at least one edge appear, as in the
+# DataFrame arm, whose state starts from the symmetric list's src set.
+
+
+def _csr_arrays(csr):
+    """Driver-side (indptr, nbrs, verts) of a ``csr_broadcast`` result;
+    ``verts`` = ids with at least one edge, in ascending order."""
+    import numpy as np
+
+    bc, _n = csr
+    indptr, nbrs = bc.value
+    return indptr, nbrs, np.flatnonzero(np.diff(indptr) > 0)
+
+
+def _kernel_frame(spark, **cols) -> DataFrame:
+    """One long-typed frame from equal-length numpy columns."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame({c: a.astype("int64") for c, a in cols.items()}),
+        ", ".join(f"{c} long" for c in cols),
+    )
+
+
+def _cc_csr_kernel(spark, csr, n_iter: int) -> DataFrame:
+    """``connected_components`` rounds over the CSR: label ← min(label,
+    min neighbor label). The non-empty neighbor slices tile ``nbrs`` in
+    vertex order, so one ``minimum.reduceat`` over their offsets is the
+    per-vertex gather."""
+    import numpy as np
+
+    indptr, nbrs, verts = _csr_arrays(csr)
+    starts = indptr[verts]
+
+    def step(lab):
+        out = lab.copy()
+        out[verts] = np.minimum(lab[verts], np.minimum.reduceat(lab[nbrs], starts))
+        return out
+
+    lab0 = np.arange(len(indptr) - 1, dtype=np.int64)
+    lab = iterate_local(lab0, step, n_iter, verify_fixpoint=True)
+    return _kernel_frame(spark, v=verts, label=lab[verts])
+
+
+def _lpa_csr_kernel(spark, csr, n_iter: int) -> DataFrame:
+    """``label_propagation`` rounds over the CSR: per vertex, the most
+    frequent neighbor label, ties to the smaller label. Neighbor labels
+    are sorted within each vertex's slots, run-length counted, and the
+    (count desc, label asc) winner taken per vertex. Like the DataFrame
+    loop, no convergence guard (LPA may oscillate); the frame is
+    hash-partitioned on ``v`` as the loop's output was, so consumers that
+    join on ``v`` (``modularity``) keep their plan shape."""
+    import numpy as np
+
+    indptr, nbrs, verts = _csr_arrays(csr)
+    owner = np.repeat(np.arange(len(indptr) - 1), np.diff(indptr))
+
+    def step(lab):
+        nl = lab[nbrs]
+        order = np.lexsort((nl, owner))
+        so, sl = owner[order], nl[order]
+        head = np.flatnonzero(
+            np.r_[True, (so[1:] != so[:-1]) | (sl[1:] != sl[:-1])]
+        )
+        cnt = np.diff(np.r_[head, len(so)])
+        go, gl = so[head], sl[head]
+        pick = np.lexsort((gl, -cnt, go))
+        go, gl = go[pick], gl[pick]
+        first = np.r_[True, go[1:] != go[:-1]]
+        out = lab.copy()
+        out[go[first]] = gl[first]
+        return out
+
+    lab0 = np.arange(len(indptr) - 1, dtype=np.int64)
+    lab = iterate_local(lab0, step, n_iter)
+    return _kernel_frame(spark, v=verts, label=lab[verts]).repartition("v")
+
+
+def _kcore_csr_kernel(spark, csr, k: int, rounds: int) -> DataFrame:
+    """``kcore`` peel over the CSR: a vertex stays active while it has at
+    least ``max(k, 1)`` active neighbors (the DataFrame step's per-src
+    count only has rows for vertices with an active neighbor)."""
+    import numpy as np
+
+    indptr, nbrs, verts = _csr_arrays(csr)
+    starts = indptr[verts]
+    floor = max(k, 1)
+
+    def active_deg(active):
+        deg = np.zeros(len(active), dtype=np.int64)
+        deg[verts] = np.add.reduceat(active[nbrs].astype(np.int64), starts)
+        return np.where(active, deg, 0)
+
+    active = iterate_local(
+        np.diff(indptr) > 0,
+        lambda a: active_deg(a) >= floor,
+        rounds,
+        verify_fixpoint=True,
+    )
+    deg = active_deg(active)
+    keep = np.flatnonzero(deg > 0)
+    return _kernel_frame(spark, v=keep, deg=deg[keep])
 
 
 # ---- triangle family (§2.3 #13-14) ----------------------------------------
@@ -1231,9 +1373,11 @@ ADJ_BC_MAX_EDGES = 25_000_000
 def csr_broadcast(pairs: DataFrame):
     """Symmetrized CSR adjacency of an undirected (src<dst) pair list,
     shipped once as a Spark broadcast → (broadcast of (indptr, nbrs),
-    n_vertices). Shared by the kernel-strategy operators (subgraph
-    matching, sampled betweenness); gate callers on ``ADJ_BC_MAX_EDGES`` —
-    the broadcast is O(|E|).
+    n_vertices). Shared by the kernel-strategy operators: in Spark tasks
+    (triangles, subgraph matching, sampled betweenness) and on the driver
+    (the connected-components, label-propagation and k-core kernels read
+    the same arrays through ``bc.value``); gate callers on
+    ``ADJ_BC_MAX_EDGES`` — the broadcast is O(|E|).
 
     Each vertex's neighbor slice is SORTED ascending: the counting kernels
     binary-search it (``searchsorted``), which is what keeps their
@@ -1272,12 +1416,20 @@ def _sorted_membership_count(sorted_arr, values):
 
 def copurchase_csr(cat: Catalog):
     """Session-shared CSR broadcast of the co-purchase adjacency →
-    ((broadcast, n_vertices)). Sampled betweenness and the subgraph-match
-    kernel ship the identical adjacency; one driver materialization +
-    broadcast serves both (callers must NOT unpersist it)."""
+    ((broadcast, n_vertices)). Every CSR-kernel consumer of the co-purchase
+    graph ships the identical adjacency; one driver materialization +
+    broadcast serves them all (callers must NOT unpersist it)."""
     return _derived_scalar(
         cat, "copurchase_csr", lambda: csr_broadcast(copurchase_pairs(cat))
     )
+
+
+def copurchase_csr_gated(cat: Catalog):
+    """``copurchase_csr(cat)`` when ``ADJ_BC_MAX_EDGES`` admits the
+    co-purchase graph, else None — the one gate of the registry rows'
+    kernel arms, on the session-memoized edge count."""
+    m, _w = copurchase_edge_stats(cat)
+    return copurchase_csr(cat) if m <= ADJ_BC_MAX_EDGES else None
 
 
 def _match_counts_wedge_join(pairs: DataFrame) -> tuple[int, int]:
@@ -1475,7 +1627,7 @@ def graph_trustrank(cat: Catalog) -> DataFrame:
 
 
 def graph_connected_components(cat: Catalog) -> DataFrame:
-    return connected_components(sym_copurchase(cat))
+    return connected_components(sym_copurchase(cat), csr=copurchase_csr_gated(cat))
 
 
 def graph_bfs(cat: Catalog) -> DataFrame:
@@ -1494,7 +1646,11 @@ def lpa_communities(cat: Catalog) -> DataFrame:
     """Session-shared LPA labeling — ``graph_modularity`` scores this very
     assignment, so the LPA_ITERS loop runs once per session, not twice."""
     return _derived(
-        cat, "lpa_labels", lambda: label_propagation(sym_copurchase(cat))
+        cat,
+        "lpa_labels",
+        lambda: label_propagation(
+            sym_copurchase(cat), csr=copurchase_csr_gated(cat)
+        ),
     )
 
 
@@ -1503,7 +1659,7 @@ def graph_label_propagation(cat: Catalog) -> DataFrame:
 
 
 def graph_kcore(cat: Catalog) -> DataFrame:
-    return kcore(sym_copurchase(cat))
+    return kcore(sym_copurchase(cat), csr=copurchase_csr_gated(cat))
 
 
 def copurchase_triangles(cat: Catalog) -> DataFrame:
@@ -1512,9 +1668,7 @@ def copurchase_triangles(cat: Catalog) -> DataFrame:
     kernel arm reuses the session CSR broadcast when the gate admits it."""
 
     def build() -> DataFrame:
-        pairs = copurchase_pairs(cat)
-        csr = copurchase_csr(cat) if pairs.count() <= ADJ_BC_MAX_EDGES else None
-        return triangles(pairs, csr=csr)
+        return triangles(copurchase_pairs(cat), csr=copurchase_csr_gated(cat))
 
     return _derived(cat, "copurchase_triangles", build)
 
@@ -1578,11 +1732,11 @@ def graph_degrees_nation(cat: Catalog) -> DataFrame:
 
 
 def graph_subgraph_matching(cat: Catalog) -> DataFrame:
-    pairs = copurchase_pairs(cat)
     # Share the CSR broadcast with sampled betweenness, but only when the
     # kernel strategy would fire anyway (the gate re-checks inside).
-    csr = copurchase_csr(cat) if pairs.count() <= ADJ_BC_MAX_EDGES else None
-    return subgraph_match_counts(pairs, csr=csr)
+    return subgraph_match_counts(
+        copurchase_pairs(cat), csr=copurchase_csr_gated(cat)
+    )
 
 
 #: registry-exported query names (order derived in registry.build_registry)

@@ -1014,21 +1014,18 @@ def graph_betweenness(cat: Catalog) -> DataFrame:
 
 def graph_betweenness_sampled(cat: Catalog) -> DataFrame:
     from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        ADJ_BC_MAX_EDGES,
-        copurchase_csr,
+        copurchase_csr_gated,
         copurchase_n_verts,
         copurchase_verts,
     )
 
-    pairs = copurchase_pairs(cat)
     # Session-shared CSR (also used by subgraph matching) when the gate
     # admits it; the in-function gate still enforces the ceiling. The
     # vertex set + count are likewise the session-shared derivations
     # (round-6 verdict item 6 — no private distinct scan per call).
-    csr = copurchase_csr(cat) if pairs.count() <= ADJ_BC_MAX_EDGES else None
     return betweenness_sampled(
-        pairs,
-        csr=csr,
+        copurchase_pairs(cat),
+        csr=copurchase_csr_gated(cat),
         verts=copurchase_verts(cat),
         n_verts=copurchase_n_verts(cat),
     )

@@ -105,6 +105,29 @@ def iterate(
     return state
 
 
+def iterate_local(state, step, n_iter: int, verify_fixpoint: bool = False):
+    """``iterate``'s contract for a driver-side numpy state: run
+    ``state = step(state)`` for at most ``n_iter`` rounds, return early on
+    the first unchanged state (steps are stationary, so the rest of the
+    rounds are no-ops and the result equals the full unroll), and — with
+    ``verify_fixpoint`` — raise ``NotConvergedError`` when the state after
+    the budget is not a fixed point. Equality is exact array equality, so
+    no monotonicity argument is needed."""
+    import numpy as np
+
+    for _ in range(n_iter):
+        nxt = step(state)
+        if np.array_equal(nxt, state):
+            return state
+        state = nxt
+    if verify_fixpoint and n_iter > 0 and not np.array_equal(step(state), state):
+        raise NotConvergedError(
+            f"state still changing after {n_iter} rounds; raise the "
+            "round budget for this graph"
+        )
+    return state
+
+
 def stat_fixpoint_probe(*exprs: str):
     """Fixpoint predicate from scalar statistics: state equality is judged
     by equality of the given SQL aggregate expressions, evaluated in one

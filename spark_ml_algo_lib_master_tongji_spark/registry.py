@@ -61,7 +61,11 @@ DRIVER_WINDOW = 50
 STALE_AFTER = 3
 #: rows whose computation the current change rewrites; they follow the
 #: obligated oracles into the window. Empty unless a change needs it.
-CHANGED: tuple[str, ...] = ()
+CHANGED: tuple[str, ...] = (
+    "graph_connected_components",
+    "graph_kcore",
+    "graph_label_propagation",
+)
 
 REPO = Path(__file__).resolve().parent.parent
 

@@ -179,3 +179,111 @@ def test_monotone_sum_probe_matches_unchanged_on_label_loops(spark):
     # truncated-propagation guard still fires through the scalar probe
     with pytest.raises(NotConvergedError):
         graph.connected_components(e, n_iter=2).collect()
+
+
+# ---- CSR kernel arm vs DataFrame arm ---------------------------------------
+#
+# Registry rows take the kernel arm whenever ADJ_BC_MAX_EDGES admits the
+# graph, so at fixture scale only these tests value-check the DataFrame
+# loops (the arm above the gate): both arms must return identical rows.
+
+_ARMS = {"cc": "connected_components", "lpa": "label_propagation", "kcore": "kcore"}
+
+
+def _both_arms(spark, pairs, fn_name, **kw):
+    """(DataFrame-arm rows, kernel-arm rows) of one propagation operator on
+    a canonical (src < dst) pair list, each sorted."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+
+    fn = getattr(graph, fn_name)
+    e = graph.symmetrize(pairs)
+    bc, n = graph.csr_broadcast(pairs)
+    try:
+        loop = sorted(map(tuple, fn(e, **kw).collect()))
+        kern = sorted(map(tuple, fn(e, csr=(bc, n), **kw).collect()))
+    finally:
+        bc.unpersist(blocking=False)
+    return loop, kern
+
+
+@pytest.mark.parametrize("arm", sorted(_ARMS))
+def test_kernel_arm_matches_dataframe_arm_on_smoke_graph(spark, arm):
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+    from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog
+
+    cat = Catalog(spark, SF_SMOKE)
+    csr = graph.copurchase_csr_gated(cat)
+    assert csr is not None  # the fixture graph is far below the gate
+    fn = getattr(graph, _ARMS[arm])
+    e = graph.sym_copurchase(cat)
+    loop = sorted(map(tuple, fn(e).collect()))
+    kern_df = fn(e, csr=csr)
+    assert kern_df.dtypes == [(c, "bigint") for c in kern_df.columns]
+    assert loop and sorted(map(tuple, kern_df.collect())) == loop
+
+
+def test_csr_gate_refuses_past_the_ceiling(spark, monkeypatch):
+    """Past ADJ_BC_MAX_EDGES the gate hands out no CSR, so the registry
+    rows fall back to the DataFrame loops."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+    from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog
+
+    cat = Catalog(spark, SF_SMOKE)
+    m, _w = graph.copurchase_edge_stats(cat)
+    monkeypatch.setattr(graph, "ADJ_BC_MAX_EDGES", m - 1)
+    assert graph.copurchase_csr_gated(cat) is None
+    monkeypatch.setattr(graph, "ADJ_BC_MAX_EDGES", m)
+    assert graph.copurchase_csr_gated(cat) is graph.copurchase_csr(cat)
+
+
+@pytest.mark.parametrize("arm", sorted(_ARMS))
+def test_kernel_arm_matches_dataframe_arm_on_two_components(spark, arm):
+    # a triangle with a tail, and a 4-cycle with one chord
+    rows = [(1, 2, 1), (1, 3, 1), (2, 3, 1), (3, 4, 1),
+            (10, 11, 1), (10, 12, 1), (10, 13, 1), (11, 12, 1), (12, 13, 1)]
+    pairs = spark.createDataFrame(rows, "src long, dst long, cnt long")
+    kw = {"k": 2} if arm == "kcore" else {}  # the 4-core here is empty
+    loop, kern = _both_arms(spark, pairs, _ARMS[arm], **kw)
+    assert loop and kern == loop
+    if arm == "cc":
+        assert dict(kern) == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 13: 10}
+
+
+def test_lpa_tie_goes_to_smaller_label_in_both_arms(spark):
+    """Path 1-2-3, one round: vertex 2 sees labels 1 and 3 once each and
+    must adopt 1; the endpoints each see only label 2."""
+    pairs = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 1)], "src long, dst long, cnt long"
+    )
+    loop, kern = _both_arms(spark, pairs, "label_propagation", n_iter=1)
+    assert loop == kern == [(1, 2), (2, 1), (3, 2)]
+
+
+def test_kcore_above_max_degree_is_empty_in_both_arms(spark):
+    loop, kern = _both_arms(spark, _pairs(spark), "kcore", k=3)
+    assert loop == kern == []
+
+
+def test_kernel_arm_not_converged_raises(spark):
+    """The kernels keep the loops' convergence guard: the budgets that make
+    the DataFrame arms raise on the 6-vertex path make the kernels raise."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+    from spark_ml_algo_lib_master_tongji_spark.plans.iterative import (
+        NotConvergedError,
+    )
+
+    pairs = _pairs(spark)
+    e = graph.symmetrize(pairs)
+    bc, n = graph.csr_broadcast(pairs)
+    try:
+        for call in (
+            lambda **kw: graph.connected_components(e, n_iter=2, **kw),
+            # a 2-core peel of a path takes 3 rounds
+            lambda **kw: graph.kcore(e, k=2, rounds=2, **kw),
+        ):
+            with pytest.raises(NotConvergedError):
+                call().collect()
+            with pytest.raises(NotConvergedError):
+                call(csr=(bc, n))
+    finally:
+        bc.unpersist(blocking=False)

@@ -146,15 +146,16 @@ def test_window_covers_every_staleness_obligation():
     assert not a["already_stale"], (
         f"oracles missed their staleness bound: {a['already_stale']}"
     )
-    # NOTE: this assertion fails BY DESIGN at the start of each round,
-    # the moment the driver lands the new CORRECTNESS_r{N}.json — the
-    # bound cohort advances and the not-yet-rotated window omits it.
-    # That is the trip-wire: rotate registry._ORDER (tier-1 new/changed,
-    # then the cohort `python tools/rotation_audit.py` prints) as the
-    # round's first commit and it goes green again.
+    # NOTE: the registry order is derived from the CORRECTNESS artifacts,
+    # so obligated oracles lead the window by construction; this fails
+    # only when they outnumber it (registry.py's overflow rule). No
+    # reorder fixes that — it needs a decision: a larger DRIVER_WINDOW or
+    # a longer STALE_AFTER bound (`python tools/rotation_audit.py` prints
+    # the cohort).
     assert not a["missing_from_window"], (
-        f"window omits obligated oracles (rotate registry._ORDER first — "
-        f"see tools/rotation_audit.py): {a['missing_from_window']}"
+        f"more obligated oracles than the window holds (enlarge "
+        f"registry.DRIVER_WINDOW or lengthen STALE_AFTER — see "
+        f"tools/rotation_audit.py): {a['missing_from_window']}"
     )
     # the NEXT round must also be satisfiable: its inherited bound cohort
     # has to fit the window with the obligated new/changed rows on top
