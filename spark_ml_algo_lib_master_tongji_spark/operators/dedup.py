@@ -8,15 +8,19 @@
 Determinism across engines: every hash is md5 (identical in Spark and
 DuckDB), so the full LSH pipeline has an exact SQL twin in ``oracles.py``.
 
-Scale design: nothing here collects to the driver. The LSH self-join keys on
-(band_idx, band_signature) so the shuffle carries only doc_id + band keys —
-candidate generation is O(collisions), never O(n²). Exact Jaccard runs only
-on candidate pairs. At 100 TB you'd raise NUM_PERM/shingle size, not change
-the plan shape.
+Scale design: the LSH self-join keys on (band_idx, band_signature) so the
+shuffle carries only doc_id + band keys — candidate generation is
+O(collisions), never O(n²). Exact Jaccard runs only on candidate pairs. At
+100 TB you'd raise NUM_PERM/shingle size, not change the plan shape. The one
+collect to the driver is exact embedding-cosine dedup below one block
+(``pairs.blocked_apply``'s driver arm: at most ``pairs.BLOCK_ROWS`` points,
+the memory one worker task of the blocked join holds anyway).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -333,47 +337,51 @@ def _keeper_election(pts: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def dedup_embedding_cosine(cat: Catalog) -> DataFrame:
-    """Exact embedding-cosine near-dup canonicalization → (vec_id, keeper).
-
-    The ε-similarity pairs come from the blocked triangular join
-    (``operators/pairs``) — exact all-pairs semantics with no cartesian
-    node, bounded task memory, and a vectorized cosine kernel whose
-    arithmetic (sequential-fold dots, half-up rounding at 4 decimals)
-    matches the SQL oracle bit-for-bit. Exact all-pairs work is Θ(n²);
-    ``dedup_embedding_cosine_lsh`` is the candidate-bounded scale path."""
-    import numpy as np
-    import pandas as pd
-
-    from spark_ml_algo_lib_master_tongji_spark.functions.vectors import (
-        as_double_array,
-    )
+def _cosine_kernel(ids_a, mat_a, ids_b, mat_b, same) -> pd.DataFrame:
+    """(vec_a, vec_b) with vec_a < vec_b and rounded cosine ≥
+    COSINE_DEDUP_THRESHOLD — sequential-fold dots and half-up rounding at
+    4 decimals, matching the SQL oracle bit-for-bit."""
     from spark_ml_algo_lib_master_tongji_spark.operators.pairs import (
-        blocked_apply,
         round_half_up_np,
         seq_dot,
         seq_self_dot,
     )
 
+    na, nb = seq_self_dot(mat_a), seq_self_dot(mat_b)
+    cos = seq_dot(mat_a, mat_b) / (
+        np.sqrt(na)[:, None] * np.sqrt(nb)[None, :]
+    )
+    keep = round_half_up_np(cos, 4) >= COSINE_DEDUP_THRESHOLD
+    if same:
+        keep &= ids_a[:, None] < ids_b[None, :]
+    ai, bj = np.nonzero(keep)
+    lo, hi = ids_a[ai], ids_b[bj]
+    return pd.DataFrame(
+        {"vec_a": np.minimum(lo, hi), "vec_b": np.maximum(lo, hi)}
+    )
+
+
+def dedup_embedding_cosine(cat: Catalog) -> DataFrame:
+    """Exact embedding-cosine near-dup canonicalization → (vec_id, keeper).
+
+    The ε-similarity pairs come from ``pairs.blocked_apply`` with
+    ``_cosine_kernel`` — exact all-pairs semantics with no cartesian node.
+    At most ``BLOCK_ROWS`` points (the 500 fixture embeddings) the kernel
+    runs once on the driver over the collected points; above it, as the
+    blocked triangular join with bounded task memory. Both arms emit the
+    same pairs. Exact all-pairs work is Θ(n²); ``dedup_embedding_cosine_lsh``
+    is the candidate-bounded scale path."""
+    from spark_ml_algo_lib_master_tongji_spark.functions.vectors import (
+        as_double_array,
+    )
+    from spark_ml_algo_lib_master_tongji_spark.operators.pairs import (
+        blocked_apply,
+    )
+
     pts = spread(cat.embeddings).select(
         "vec_id", as_double_array("embedding").alias("v")
     ).persist()
-
-    def kernel(ids_a, mat_a, ids_b, mat_b, same) -> pd.DataFrame:
-        na, nb = seq_self_dot(mat_a), seq_self_dot(mat_b)
-        cos = seq_dot(mat_a, mat_b) / (
-            np.sqrt(na)[:, None] * np.sqrt(nb)[None, :]
-        )
-        keep = round_half_up_np(cos, 4) >= COSINE_DEDUP_THRESHOLD
-        if same:
-            keep &= ids_a[:, None] < ids_b[None, :]
-        ai, bj = np.nonzero(keep)
-        lo, hi = ids_a[ai], ids_b[bj]
-        return pd.DataFrame(
-            {"vec_a": np.minimum(lo, hi), "vec_b": np.maximum(lo, hi)}
-        )
-
-    pairs = blocked_apply(pts, kernel, "vec_a long, vec_b long")
+    pairs = blocked_apply(pts, _cosine_kernel, "vec_a long, vec_b long")
     return _keeper_election(pts, pairs)
 
 
@@ -453,9 +461,6 @@ def pipeline_semantic_dedup(
     Fixture clusters are near-balanced (pinned by
     ``ml_kmeans_lloyd_sizes``), so the fixture exercises the grouped-map
     arm and pytest pins giant-arm equality by forcing the gate down."""
-    import numpy as np
-    import pandas as pd
-
     from spark_ml_algo_lib_master_tongji_spark.functions.vectors import (
         as_double_array,
     )

@@ -22,7 +22,10 @@ Scale: ``_eps_pairs`` is a blocked triangular ε-join (``operators/pairs``)
 kernel per block pair. No cartesian / broadcast-nested-loop node appears
 in the plan; task memory is bounded by the block size; the distance
 arithmetic is vectorized instead of the interpreted ``aggregate``-HOF
-expression (which dominated round-1 wall time).
+expression (which dominated round-1 wall time). A point set that fits one
+block (n ≤ ``pairs.BLOCK_ROWS``, e.g. the 500 sf0.001 fixture embeddings)
+runs the same kernel once on the driver instead of in one Python worker
+task, with identical pairs (``blocked_apply``'s driver arm).
 
 Candidate generation dispatches on measured occupancy (``_eps_arm``): a
 grid-cell candidate join (cells of side ε on ``GRID_DIMS`` projected

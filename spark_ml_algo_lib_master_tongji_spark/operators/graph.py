@@ -1384,16 +1384,26 @@ def csr_broadcast(pairs: DataFrame):
     per-vertex work O(Σ_{b∈N(u)} deg b · log deg u) — proportional to the
     graph's actual wedge count — instead of the O(|V|) full-width bincount
     per vertex that made sparse many-vertex graphs quadratic (round-4
-    verdict)."""
+    verdict).
+
+    Vertex ids index the arrays directly: ``indptr`` has max id + 2
+    entries, so memory is O(max id), not O(|V|) — sparse large ids cost
+    dense arrays. Neighbor ids are stored as int32, so an id outside
+    [0, 2^31) raises ``ValueError`` instead of wrapping."""
     import numpy as np
 
     edges = pairs.select("src", "dst").toPandas()
     srcs = edges["src"].to_numpy()
     dsts = edges["dst"].to_numpy()
-    n = int(max(srcs.max(), dsts.max())) + 1
-    deg = np.bincount(srcs, minlength=n) + np.bincount(dsts, minlength=n)
     all_src = np.concatenate([srcs, dsts])
     all_nbr = np.concatenate([dsts, srcs])
+    lo, hi = int(all_src.min()), int(all_src.max())
+    if lo < 0 or hi >= 2**31:
+        raise ValueError(
+            f"csr_broadcast: vertex ids must lie in [0, 2^31), got [{lo}, {hi}]"
+        )
+    n = hi + 1
+    deg = np.bincount(srcs, minlength=n) + np.bincount(dsts, minlength=n)
     # lexsort: primary key = source vertex (slice layout), secondary =
     # neighbor id (sorted within each slice).
     order = np.lexsort((all_nbr, all_src))

@@ -12,6 +12,12 @@ block_b) group emits qualifying pairs. Properties that matter at scale:
 - the kernel is vectorized numpy instead of interpreted ``aggregate``-HOF
   expressions (measured ~5× on the round-1 DBSCAN ε-join).
 
+Below the one-block gate (n ≤ ``BLOCK_ROWS``) ``blocked_apply`` runs the
+kernel on the driver instead: the worker shape would send every point to
+one group in one Python task, so collecting the same ≤ block_rows·dim
+doubles and calling the same kernel yields the same pairs without starting
+a Python worker (a cold daemon, fork and imports per fresh SparkContext).
+
 Exact all-pairs work is irreducibly Θ(n²); for corpora where candidates
 can be pruned (clusterable / near-dup regimes) put a candidate generator
 (LSH buckets, grid cells, prefix filters — see dedup.py/similarity.py) in
@@ -66,17 +72,14 @@ def round_half_up_np(x: np.ndarray, digits: int) -> np.ndarray:
     return np.floor(x * scale + 0.5) / scale
 
 
-def _n_blocks(n: int, block_rows: int, max_blocks: int | None = None) -> int:
+def _n_blocks(n: int, block_rows: int) -> int:
     """Block count for ``n`` points: ⌈n/block_rows⌉, so per-task memory
     stays ≤ 2·block_rows·dim doubles at ANY corpus size (a fixed cap would
     grow task memory linearly past cap·block_rows points). The trade is
     replication: every point ships to B groups, so the replicated input is
     B× the corpus — acceptable because exact all-pairs work is Θ(n²) and
-    B ∝ n keeps per-task work constant. ``max_blocks`` is an explicit
-    opt-in ceiling for callers that prefer replication bounds over memory
-    bounds."""
-    b = max(1, -(-n // block_rows))
-    return b if max_blocks is None else min(b, max_blocks)
+    B ∝ n keeps per-task work constant."""
+    return max(1, -(-n // block_rows))
 
 
 def _pair_group_runner(
@@ -125,7 +128,6 @@ def blocked_apply(
     id_col: str = "vec_id",
     vec_col: str = "v",
     block_rows: int = BLOCK_ROWS,
-    max_blocks: int | None = None,
 ) -> DataFrame:
     """Run ``kernel`` over every pair of blocks of ``pts``.
 
@@ -133,9 +135,29 @@ def blocked_apply(
     the block grid, it never affects results. Block assignment hashes the
     id (``xxhash64 mod B``) so blocks stay balanced for sparse/structured
     id spaces, not just dense 0..n-1 ids; a block-pair group where one
-    side hashed empty yields an empty result frame."""
+    side hashed empty yields an empty result frame.
+
+    Driver arm: when n ≤ ``block_rows`` the grid is one block, so the
+    points are collected with ``toPandas`` (Arrow-batched where the
+    session enables it, as ``session.get_session`` does) and the kernel
+    runs once on the driver as ``kernel(ids, mat, ids, mat, True)`` — the
+    call the single worker group would make, on the same ≤
+    block_rows·dim doubles, so the pairs are identical (the kernels fold
+    each pair sequentially). The result is a local DataFrame with
+    ``out_schema``: no ``FlatMapGroupsInPandas`` node, no Python
+    worker."""
     n = pts.count()
-    n_blocks = _n_blocks(n, block_rows, max_blocks)
+    if n <= block_rows:
+        spark = pts.sparkSession
+        if n == 0:
+            return spark.createDataFrame([], out_schema)
+        pdf = pts.select(id_col, vec_col).toPandas()
+        ids = pdf[id_col].to_numpy()
+        mat = np.stack(pdf[vec_col].to_numpy())
+        pairs = kernel(ids, mat, ids, mat, True)
+        return spark.createDataFrame(pairs, out_schema)
+
+    n_blocks = _n_blocks(n, block_rows)
     run = _pair_group_runner(kernel, out_schema, id_col, vec_col)
 
     replicated = pts.select(

@@ -62,9 +62,9 @@ STALE_AFTER = 3
 #: rows whose computation the current change rewrites; they follow the
 #: obligated oracles into the window. Empty unless a change needs it.
 CHANGED: tuple[str, ...] = (
-    "graph_connected_components",
-    "graph_kcore",
-    "graph_label_propagation",
+    "dedup_embedding_cosine",
+    "ml_dbscan",
+    "ml_dbscan_summary",
 )
 
 REPO = Path(__file__).resolve().parent.parent

@@ -206,6 +206,17 @@ def _both_arms(spark, pairs, fn_name, **kw):
     return loop, kern
 
 
+@pytest.mark.parametrize("bad", [-1, 2**31])
+def test_csr_broadcast_rejects_ids_outside_int32(spark, bad):
+    """Neighbor ids are stored as int32 and index ``indptr`` directly: an
+    id outside [0, 2^31) must raise before the cast, not wrap silently."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+
+    pairs = spark.createDataFrame([(0, 1), (1, bad)], "src long, dst long")
+    with pytest.raises(ValueError, match=r"\[0, 2\^31\)"):
+        graph.csr_broadcast(pairs)
+
+
 @pytest.mark.parametrize("arm", sorted(_ARMS))
 def test_kernel_arm_matches_dataframe_arm_on_smoke_graph(spark, arm):
     from spark_ml_algo_lib_master_tongji_spark.operators import graph

@@ -1,9 +1,10 @@
 """Blocked all-pairs kernel (operators/pairs.py): block-grid sizing and
 pair totality under sparse/structured id spaces (round-2 ADVICE: pmod of
 raw ids crashed on empty blocks; a fixed 64-block cap let task memory grow
-linearly past ~32k points). Plus the grid-cell candidate arm (round-6):
-result parity with the exact blocked join, and the occupancy gate that
-dispatches between them."""
+linearly past ~32k points), and parity of the one-block driver arm with
+the worker arm. Plus the grid-cell candidate arm (round-6): result parity
+with the exact blocked join, and the occupancy gate that dispatches
+between them."""
 
 from __future__ import annotations
 
@@ -22,9 +23,8 @@ def cat(spark):
 
 
 def test_block_count_derives_from_n():
-    """⌈n/block_rows⌉ with no implicit ceiling — per-task memory stays
-    bounded by block_rows at any corpus size; an explicit max_blocks caps
-    replication when the caller opts in."""
+    """⌈n/block_rows⌉ with no ceiling — per-task memory stays bounded by
+    block_rows at any corpus size."""
     from spark_ml_algo_lib_master_tongji_spark.operators.pairs import (
         BLOCK_ROWS,
         _n_blocks,
@@ -36,7 +36,29 @@ def test_block_count_derives_from_n():
     # far past the old 64-block cap: blocks keep scaling with n
     assert _n_blocks(1_000_000, BLOCK_ROWS) == -(-1_000_000 // BLOCK_ROWS)
     assert _n_blocks(1_000_000, BLOCK_ROWS) > 64
-    assert _n_blocks(1_000_000, BLOCK_ROWS, max_blocks=64) == 64
+
+
+def _has_worker_groups(df) -> bool:
+    """Does ``df``'s physical plan run a grouped pandas kernel?"""
+    return "FlatMapGroupsInPandas" in df._jdf.queryExecution().toString()
+
+
+def _all_pairs_kernel():
+    """Kernel emitting every unordered pair as canonical (a, b) with
+    a < b — predicate-free, so a lost or duplicated pair shows. A closure,
+    so workers unpickle it by value (this test module is not importable
+    there)."""
+
+    def kernel(ids_a, mat_a, ids_b, mat_b, same):
+        if same:
+            ia, ib = np.triu_indices(len(ids_a), k=1)
+            a, b = ids_a[ia], ids_a[ib]
+        else:
+            a = np.repeat(ids_a, len(ids_b))
+            b = np.tile(ids_b, len(ids_a))
+        return pd.DataFrame({"a": np.minimum(a, b), "b": np.maximum(a, b)})
+
+    return kernel
 
 
 def test_blocked_apply_total_pairs_on_sparse_ids(spark):
@@ -53,27 +75,83 @@ def test_blocked_apply_total_pairs_on_sparse_ids(spark):
         "vec_id long, v array<double>",
     ).cache()
 
-    def kernel(ids_a, mat_a, ids_b, mat_b, same):
-        if same:
-            ia, ib = np.triu_indices(len(ids_a), k=1)
-            a, b = ids_a[ia], ids_a[ib]
-        else:
-            a = np.repeat(ids_a, len(ids_b))
-            b = np.tile(ids_b, len(ids_a))
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"a": lo, "b": hi})
-
     # block_rows=1 → one hash block target per point: with 10 ids hashed
     # into 10 blocks, collisions leave some blocks empty (deterministic
     # for fixed ids — xxhash64 is seeded), exercising the empty guard.
     got = sorted(
         (r["a"], r["b"])
-        for r in blocked_apply(pts, kernel, "a long, b long", block_rows=1).collect()
+        for r in blocked_apply(
+            pts, _all_pairs_kernel(), "a long, b long", block_rows=1
+        ).collect()
     )
     want = sorted(
         (min(x, y), max(x, y)) for i, x in enumerate(ids) for y in ids[i + 1 :]
     )
     assert got == want
+
+
+@pytest.mark.parametrize("kernel", ["dedup_cosine", "dbscan_eps"])
+def test_blocked_apply_driver_arm_matches_worker_arm(cat, kernel):
+    """Below the one-block gate the kernel runs on the driver; forcing the
+    worker arm (block_rows < n) on the same points must yield exactly the
+    same pairs and schema — the fixture embeddings under both registry
+    kernels that route through ``blocked_apply``."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import dedup, density
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _cached
+    from spark_ml_algo_lib_master_tongji_spark.operators.pairs import (
+        BLOCK_ROWS,
+        blocked_apply,
+    )
+
+    kern, schema = {
+        "dedup_cosine": (dedup._cosine_kernel, "vec_a long, vec_b long"),
+        "dbscan_eps": (density._eps_kernel, "i long, j long"),
+    }[kernel]
+    pts = _cached(density._points(cat))
+    assert pts.count() <= BLOCK_ROWS  # the fixture fits one block
+
+    drv = blocked_apply(pts, kern, schema)
+    wrk = blocked_apply(pts, kern, schema, block_rows=128)  # 4 blocks
+    assert not _has_worker_groups(drv)
+    assert _has_worker_groups(wrk)
+    assert drv.schema == wrk.schema
+    got = sorted(map(tuple, drv.collect()))
+    assert got == sorted(map(tuple, wrk.collect()))
+    assert len(got) > 0
+    pts.unpersist(blocking=False)
+
+
+def test_blocked_apply_gate_boundary_empty_and_single(spark):
+    """n == block_rows takes the driver arm and n == block_rows + 1 the
+    worker arm, both emitting every pair once; empty input and a single
+    point take the driver arm and return an empty frame with the worker
+    arm's schema."""
+    from spark_ml_algo_lib_master_tongji_spark.operators.pairs import blocked_apply
+
+    ids = [97 * i + 5 for i in range(9)]
+    pts = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 3)]) for i in ids],
+        "vec_id long, v array<double>",
+    ).cache()
+    want = sorted(
+        (min(x, y), max(x, y)) for i, x in enumerate(ids) for y in ids[i + 1 :]
+    )
+    kern = _all_pairs_kernel()
+    at = blocked_apply(pts, kern, "a long, b long", block_rows=9)
+    past = blocked_apply(pts, kern, "a long, b long", block_rows=8)
+    assert not _has_worker_groups(at)
+    assert _has_worker_groups(past)
+    assert sorted(map(tuple, at.collect())) == want
+    assert sorted(map(tuple, past.collect())) == want
+
+    for rows in ([], [(5, [1.0, 2.0])]):
+        few = spark.createDataFrame(rows, "vec_id long, v array<double>").cache()
+        out = blocked_apply(few, kern, "a long, b long")
+        assert not _has_worker_groups(out)
+        assert out.schema == past.schema
+        assert out.collect() == []
+        few.unpersist(blocking=False)
+    pts.unpersist(blocking=False)
 
 
 def _blob_points(spark, n_blobs=6, per_blob=30, spread=0.3):

@@ -84,6 +84,24 @@ def test_pair_kernels_plan_no_cartesian(spark, query, allow_bnlj):
         )
 
 
+def test_blocked_apply_worker_arm_plan_shape(cat):
+    """At SF_SMOKE the registry's blocked pair rows fit one block and run
+    their kernel on the driver, so the cases above no longer plan a
+    blocked join. Pin the worker arm directly: the fixture embeddings at
+    block_rows=128 (4 blocks) must run as grouped Arrow kernels, with no
+    cartesian, broadcast-nested-loop or pickled-UDF node."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import density
+    from spark_ml_algo_lib_master_tongji_spark.operators.pairs import blocked_apply
+
+    df = blocked_apply(
+        density._points(cat), density._eps_kernel, "i long, j long", block_rows=128
+    )
+    plan = _full_plan(df)
+    assert "FlatMapGroupsInPandas" in plan
+    for node in ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython"):
+        assert node not in plan, node
+
+
 def test_sym_copurchase_single_shuffle_load(spark):
     """The graph load aggregates the symmetric edge list exchange-free
     after its explicit repartition(src): exactly ONE shuffle may follow
@@ -504,6 +522,9 @@ def test_group_distinct_sketch_never_keyed_per_user(cat):
         # the deliberate Arrow/Python boundaries of the engine — cogrouped
         # KNN kernels, the Brandes mapInPandas arms, the multimodal stubs,
         # and the semantic-dedup kernels all flow through these rows
+        # (dedup_embedding_cosine fits one block at SF_SMOKE and runs on
+        # the driver; test_blocked_apply_worker_arm_plan_shape pins its
+        # worker arm)
         "ml_knn_classifier",
         "dedup_embedding_cosine",
         "mm_byte_features",
