@@ -131,15 +131,13 @@ def _cross_evals(spark, sf_dir: str) -> dict[str, float]:
         from spark_ml_algo_lib_master_tongji_spark.operators.dedup import (
             semdedup_k,
         )
-        from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-            _derived_scalar,
-        )
+        from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
         from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import (
             _points_shared,
             lloyd_ivf_agreement as agreement,
         )
 
-        n = _derived_scalar(
+        n = _derived_obj(
             cat, "embeddings_count", lambda: _points_shared(cat).count()
         )
         return agreement(cat, semdedup_k(n))
@@ -153,15 +151,13 @@ def _cross_evals(spark, sf_dir: str) -> dict[str, float]:
         from spark_ml_algo_lib_master_tongji_spark.operators.dedup import (
             semdedup_k,
         )
-        from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-            _derived_scalar,
-        )
+        from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
         from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import (
             _points_shared,
             lloyd_ivf_agreement as agreement,
         )
 
-        n = _derived_scalar(
+        n = _derived_obj(
             cat, "embeddings_count", lambda: _points_shared(cat).count()
         )
         k = semdedup_k(n)

@@ -446,9 +446,9 @@ def pipeline_semantic_dedup(
     Composition of two oracle-checked stages: the deterministic Lloyd
     assignment (session-shared, k ∝ n via ``semdedup_k`` — SemDeDup's
     operating point, coded not just documented since round 6) scopes the
-    comparison; one grouped-map kernel per cluster emits the ≥-threshold
-    pairs with the same sequential-fold cosine arithmetic as the exact
-    dedup, then the standard single-hop keeper election runs.
+    comparison; one grouped-map task per cluster emits the ≥-threshold
+    pairs with the exact dedup's ``_cosine_kernel``, then the standard
+    single-hop keeper election runs.
 
     Scale shape: pair work drops from Θ(n²) to Σ_c |c|² — with k ∝ n the
     mean cluster size is pinned at SEMDEDUP_TARGET_CLUSTER_SIZE, so the
@@ -464,51 +464,24 @@ def pipeline_semantic_dedup(
     from spark_ml_algo_lib_master_tongji_spark.functions.vectors import (
         as_double_array,
     )
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
     from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import (
         kmeans_lloyd,
     )
     from spark_ml_algo_lib_master_tongji_spark.operators.pairs import (
         grouped_blocked_apply,
-        round_half_up_np,
-        seq_dot,
-        seq_self_dot,
     )
 
     pts = spread(cat.embeddings).select(
         "vec_id", as_double_array("embedding").alias("v")
     )
-    n = _derived_scalar(cat, "embeddings_count", lambda: pts.count())
+    n = _derived_obj(cat, "embeddings_count", lambda: pts.count())
     grp = pts.join(kmeans_lloyd(cat, k=semdedup_k(n)), "vec_id")
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vec_id"].to_numpy()
         mat = np.stack(pdf["v"].to_numpy())
-        norms = np.sqrt(seq_self_dot(mat))
-        cos = seq_dot(mat, mat) / (norms[:, None] * norms[None, :])
-        keep = round_half_up_np(cos, 4) >= COSINE_DEDUP_THRESHOLD
-        keep &= ids[:, None] < ids[None, :]
-        ai, bj = np.nonzero(keep)
-        return pd.DataFrame({"vec_a": ids[ai], "vec_b": ids[bj]})
-
-    def cross_kern(ids_a, mat_a, ids_b, mat_b, same) -> pd.DataFrame:
-        # block-pair twin of ``kern``: same sequential-fold cosine, same
-        # 4-decimal half-up rounding, canonical (min, max) emission.
-        na = np.sqrt(seq_self_dot(mat_a))
-        nb = np.sqrt(seq_self_dot(mat_b))
-        cos = seq_dot(mat_a, mat_b) / (na[:, None] * nb[None, :])
-        keep = round_half_up_np(cos, 4) >= COSINE_DEDUP_THRESHOLD
-        if same:
-            keep &= ids_a[:, None] < ids_b[None, :]
-        else:
-            keep &= ids_a[:, None] != ids_b[None, :]
-        ai, bj = np.nonzero(keep)
-        lo, hi = ids_a[ai], ids_b[bj]
-        return pd.DataFrame(
-            {"vec_a": np.minimum(lo, hi), "vec_b": np.maximum(lo, hi)}
-        )
+        return _cosine_kernel(ids, mat, ids, mat, True)
 
     sizes = grp.groupBy("cid").agg(F.count(F.lit(1)).alias("_n"))
     has_giant = (
@@ -527,7 +500,7 @@ def pipeline_semantic_dedup(
         giant = grouped_blocked_apply(
             sized.where(F.col("_n") > giant_rows).drop("_n"),
             "cid",
-            cross_kern,
+            _cosine_kernel,
             "vec_a long, vec_b long",
         )
         pairs = normal.unionByName(giant)

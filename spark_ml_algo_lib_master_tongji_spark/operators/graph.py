@@ -19,15 +19,19 @@ number of supersteps (matching the reference's ``numIter`` variants, e.g.
 is a pure deterministic function of the input — exactly reproducible by the
 unrolled-SQL DuckDB oracles in ``graph_oracles.py``.
 
-**CSR kernel arm.** Connected components, label propagation and k-core
-also run as driver-side numpy kernels when the caller passes ``csr=`` (the
-session ``copurchase_csr``, which registry rows pass only while
-``ADJ_BC_MAX_EDGES`` admits the graph — ``copurchase_csr_gated``). The
-kernels run the same synchronous rounds under the same contract
-(``plans.iterative.iterate_local``): below the gate a DataFrame superstep
-is a few Spark jobs of scheduling latency over little data. Triangles,
-subgraph matching and sampled betweenness use the same gated broadcast
-inside Spark tasks.
+**CSR kernel arm.** Every operator with a CSR kernel — connected
+components, label propagation, k-core, triangles, subgraph matching and
+sampled betweenness — runs the kernel if and only if the caller passes
+``csr=`` (a ``csr_broadcast`` of the same graph), and its DataFrame arm
+otherwise; no operator counts edges to pick an arm. Whether a graph fits a
+driver broadcast is decided once, by ``csr_gated`` (``ADJ_BC_MAX_EDGES``);
+registry rows reach it through ``copurchase_csr_gated``. The CC, LPA and
+k-core kernels run the same synchronous rounds on the driver under the
+same contract (``plans.iterative.iterate_local``): below the gate a
+DataFrame superstep is a few Spark jobs of scheduling latency over little
+data. The triangle, matching and betweenness kernels read the broadcast
+inside Spark tasks; sampled betweenness has no DataFrame arm and raises
+without ``csr``.
 
 **Fixture graphs** (derivations are themselves relational operators):
 - *co-purchase graph*: undirected part–part edges, weight = number of times
@@ -120,16 +124,21 @@ def _evict_dead_sessions(app_id: str) -> None:
     is sufficient (the dead session's JVM-side blocks died with its
     SparkContext)."""
     with _CACHE_GUARD:
-        for cache in (_DERIV_CACHE, _SCALAR_CACHE, _OBJ_CACHE, _KEY_LOCKS):
+        for cache in (_DERIV_CACHE, _OBJ_CACHE, _KEY_LOCKS):
             for key in [k for k in cache if k[0] != app_id]:
                 cache.pop(key, None)
 
 
+def _cache_key(cat: Catalog, name: str) -> tuple:
+    """Key of ``name`` in the session-scoped caches. Keyed by
+    applicationId, not id(spark): a stopped session's id() can be reused
+    by a new session, which would hand out cached values bound to a dead
+    SparkContext (round-1 ADVICE)."""
+    return (cat.spark.sparkContext.applicationId, cat.sf_dir, name)
+
+
 def _derived(cat: Catalog, name: str, build) -> DataFrame:
-    # Keyed by applicationId, not id(spark): a stopped session's id() can be
-    # reused by a new session, which would hand out cached DataFrames bound
-    # to a dead SparkContext (round-1 ADVICE).
-    key = (cat.spark.sparkContext.applicationId, cat.sf_dir, name)
+    key = _cache_key(cat, name)
     if key in _DERIV_CACHE:  # lock-free fast path (CPython dict reads are atomic)
         return _DERIV_CACHE[key]
     with _key_lock(key):
@@ -233,36 +242,19 @@ def vertices(edges: DataFrame) -> DataFrame:
     return edges.select(F.col("src").alias("v")).distinct()
 
 
-# Session-scoped scalar memo (vertex counts and similar single numbers that
-# several queries re-derive with a full job each).
-_SCALAR_CACHE: dict[tuple, int] = {}
-
-
-def _derived_scalar(cat: Catalog, name: str, compute):
-    key = (cat.spark.sparkContext.applicationId, cat.sf_dir, name)
-    if key in _SCALAR_CACHE:
-        return _SCALAR_CACHE[key]
-    with _key_lock(key):
-        if key not in _SCALAR_CACHE:
-            _evict_dead_sessions(key[0])
-            with benchlib.load_timer(name):
-                val = compute()
-            with _CACHE_GUARD:  # see the insert note in _derived
-                _SCALAR_CACHE[key] = val
-    return _SCALAR_CACHE[key]
-
-
-# Session-scoped memo for fitted models and other driver-side objects
-# (same keying as ``_derived``): when two registry queries train the
-# byte-identical seeded estimator on the same input — the explicit ALS of
+# Session-scoped value memo (same keying as ``_derived``) for everything
+# that is not a DataFrame: single numbers several queries would re-derive
+# with a full job each (vertex and edge counts, shared fit metrics), CSR
+# broadcasts, and fitted models — when two registry queries train the
+# byte-identical seeded estimator on the same input (the explicit ALS of
 # the mse and recommend surfaces, the binary GBT of the classifier and
-# xgboost-fallback workloads — one fit serves both, the model analogue of
+# xgboost-fallback workloads), one fit serves both, the model analogue of
 # the reference's load-once-run-many lifecycle.
 _OBJ_CACHE: dict[tuple, object] = {}
 
 
 def _derived_obj(cat: Catalog, name: str, build):
-    key = (cat.spark.sparkContext.applicationId, cat.sf_dir, name)
+    key = _cache_key(cat, name)
     if key in _OBJ_CACHE:
         return _OBJ_CACHE[key]
     with _key_lock(key):
@@ -282,7 +274,7 @@ def copurchase_verts(cat: Catalog) -> DataFrame:
 
 def copurchase_n_verts(cat: Catalog) -> int:
     """Session-shared |V| of the co-purchase graph (one count, memoized)."""
-    return _derived_scalar(
+    return _derived_obj(
         cat, "copurchase_n_verts", lambda: copurchase_verts(cat).count()
     )
 
@@ -1011,57 +1003,30 @@ def _kcore_csr_kernel(spark, csr, k: int, rounds: int) -> DataFrame:
 # ---- triangle family (§2.3 #13-14) ----------------------------------------
 
 
-def triangles(pairs: DataFrame, csr=None, adj_bc_max_edges: int | None = None) -> DataFrame:
+def triangles(pairs: DataFrame, csr=None) -> DataFrame:
     """Per-vertex triangle counts → (v, triangles), zero-filled for
     triangle-free vertices (GraphX ``TriangleCount.run`` on canonical
     edges, ``TrangleCountRunner.scala:81``).
 
-    Strategy dispatch on |E| (the ``subgraph_match_counts`` pattern): a
-    CSR-broadcast bincount kernel while the adjacency provably fits a
-    broadcast — per vertex u one vectorized pass computes
-    t(u) = Σ_{w∈N(u)} |N(u)∩N(w)| / 2, no wedge rows ever shuffle — and
-    the canonical two-path + closing-edge join past the ceiling (work
-    scales with the actual wedge count, AQE handles skew). Identical
-    exact counts; the join arm is the 100 TB path."""
-    if adj_bc_max_edges is None:
-        adj_bc_max_edges = ADJ_BC_MAX_EDGES
-    own = csr is None and pairs.storageLevel == StorageLevel.NONE
-    if own:
-        # The gate count would otherwise pay one full derivation pass just
-        # for dispatch, then the chosen arm re-derives pairs (round-4
-        # ADVICE; registry callers pass the session-cached relation).
-        pairs = _cached(pairs)
-    if csr is not None or pairs.count() <= adj_bc_max_edges:
-        out = _triangles_csr_kernel(pairs, csr=csr)
-        if own:
-            # the kernel arm materialized its output (own-CSR branch), so
-            # the gate cache is no longer needed — release it rather than
-            # pin a copy per standalone call (round-5 review)
-            pairs.unpersist(blocking=False)
-        return out
-    if not own:
-        # join arm over a caller-cached relation: result stays lazy — the
-        # caller owns materialization and its cache's lifetime.
-        return _triangles_wedge_join(pairs)
-    # Standalone join-arm call: this function owns the gate cache, so
-    # materialize the wedge-join output eagerly and release the cache in a
-    # finally — the arm that fires on the LARGEST inputs must not pin an
-    # O(|E|) MEMORY_AND_DISK copy for the session (round-5 ADVICE).
-    # localCheckpoint, not persist: its blocks are lineage-truncated and
-    # ContextCleaner-released once the caller drops the frame, so repeated
-    # standalone calls don't accumulate O(|V|) session-pinned results
-    # (round-6 ADVICE).
-    try:
-        return _triangles_wedge_join(pairs).localCheckpoint(eager=True)
-    finally:
-        pairs.unpersist(blocking=False)
+    With ``csr`` (a ``csr_broadcast`` of ``pairs``) the broadcast-CSR
+    kernel runs — per vertex u one vectorized pass computes
+    t(u) = Σ_{w∈N(u)} |N(u)∩N(w)| / 2, no wedge rows ever shuffle;
+    without it, the canonical two-path + closing-edge join (work scales
+    with the actual wedge count, AQE handles skew). Identical exact
+    counts; the join arm is the 100 TB path. Whether the graph fits the
+    broadcast is the caller's decision (``csr_gated``); the result is
+    lazy either way."""
+    if csr is not None:
+        return _triangles_csr_kernel(pairs, csr)
+    return _triangles_wedge_join(pairs)
 
 
 def _triangles_wedge_join(pairs: DataFrame) -> DataFrame:
     """(v, triangles) by relational joins — one canonical triangle a<b<c
-    per closed triple via the two-path + closing-edge join. ``pairs``
-    should already be cached (``triangles()`` guarantees it); re-caching
-    the projection here would pin a duplicate copy with no release path."""
+    per closed triple via the two-path + closing-edge join. ``pairs`` is
+    scanned four times; registry callers pass the session-cached edge list
+    (re-caching the projection here would pin a copy with no release
+    path)."""
     p = pairs.select("src", "dst")
     e1 = p.toDF("a", "b")
     e2 = p.toDF("b", "c")
@@ -1080,7 +1045,7 @@ def _triangles_wedge_join(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _triangles_csr_kernel(pairs: DataFrame, csr=None) -> DataFrame:
+def _triangles_csr_kernel(pairs: DataFrame, csr) -> DataFrame:
     """(v, triangles) by the broadcast-CSR counting kernel: each task owns
     a vertex range; per vertex u, every two-hop endpoint reached through
     N(u) that is itself a member of N(u) closes a triangle, so
@@ -1091,13 +1056,13 @@ def _triangles_csr_kernel(pairs: DataFrame, csr=None) -> DataFrame:
     per vertex, so sparse many-vertex graphs (e.g. road networks) stay
     linear-ish rather than O(|V|²) (round-4 verdict fix). Only (v, t) rows
     for owned vertices move over the wire. Spark-side shape mirrors
-    ``_match_counts_csr_kernel``."""
+    ``_match_counts_csr_kernel``; ``csr`` is the caller's
+    ``csr_broadcast`` of ``pairs``, which the caller releases."""
     import numpy as np
     import pandas as pd
 
     spark = pairs.sparkSession
-    own = csr is None
-    bc, n = csr_broadcast(pairs) if csr is None else csr
+    bc, n = csr
 
     def kern(pdf_iter):
         ip, nb = bc.value
@@ -1120,13 +1085,7 @@ def _triangles_csr_kernel(pairs: DataFrame, csr=None) -> DataFrame:
         .mapInPandas(kern, "v long, triangles long")
     )
     verts = vertices(symmetrize(pairs.withColumn("cnt", F.lit(1))))
-    out = verts.join(per, "v").select("v", "triangles")
-    if own:
-        # materialize before releasing the per-call broadcast
-        out = _cached(out)
-        out.count()
-        bc.unpersist(blocking=False)
-    return out
+    return verts.join(per, "v").select("v", "triangles")
 
 
 def clustering_coefficient(
@@ -1278,11 +1237,7 @@ def _min_plus_closure_local(edges: DataFrame) -> DataFrame:
     )
 
 
-def min_plus_closure(
-    edges: DataFrame,
-    doublings: int = CLOSURE_DOUBLINGS,
-    tiny_max_edges: int = TINY_CLOSURE_MAX_EDGES,
-) -> DataFrame:
+def min_plus_closure(edges: DataFrame, doublings: int = CLOSURE_DOUBLINGS) -> DataFrame:
     """All-pairs shortest hop counts (src, dst, dist) by min-plus repeated
     squaring — exact once the doubling passes the diameter (probed).
     Strategy dispatch (the CSR-kernel pattern): graphs small enough that
@@ -1294,7 +1249,7 @@ def min_plus_closure(
     if own:
         edges = _cached(edges)  # gate count + chosen arm share one pass
     try:
-        if edges.count() <= tiny_max_edges:
+        if edges.count() <= TINY_CLOSURE_MAX_EDGES:
             return _min_plus_closure_local(edges)  # collects eagerly
 
         def step(d: DataFrame, _i: int) -> DataFrame:
@@ -1365,8 +1320,9 @@ def nation_degrees(edges: DataFrame) -> DataFrame:
 
 # ---- subgraph matching (§2.3 #22) ------------------------------------------
 
-#: Edge ceiling for the CSR-broadcast counting strategy (~8 bytes/edge as
-#: int32 neighbor+indptr arrays → ≤ ~200 MB broadcast at the ceiling).
+#: Edge ceiling of ``csr_gated``, the one gate of every CSR kernel arm
+#: (~8 bytes/edge as int32 neighbor+indptr arrays → ≤ ~200 MB broadcast at
+#: the ceiling).
 ADJ_BC_MAX_EDGES = 25_000_000
 
 
@@ -1376,8 +1332,8 @@ def csr_broadcast(pairs: DataFrame):
     n_vertices). Shared by the kernel-strategy operators: in Spark tasks
     (triangles, subgraph matching, sampled betweenness) and on the driver
     (the connected-components, label-propagation and k-core kernels read
-    the same arrays through ``bc.value``); gate callers on
-    ``ADJ_BC_MAX_EDGES`` — the broadcast is O(|E|).
+    the same arrays through ``bc.value``); callers build it through
+    ``csr_gated`` — the broadcast is O(|E|).
 
     Each vertex's neighbor slice is SORTED ascending: the counting kernels
     binary-search it (``searchsorted``), which is what keeps their
@@ -1429,17 +1385,26 @@ def copurchase_csr(cat: Catalog):
     ((broadcast, n_vertices)). Every CSR-kernel consumer of the co-purchase
     graph ships the identical adjacency; one driver materialization +
     broadcast serves them all (callers must NOT unpersist it)."""
-    return _derived_scalar(
+    return _derived_obj(
         cat, "copurchase_csr", lambda: csr_broadcast(copurchase_pairs(cat))
     )
 
 
+def csr_gated(n_edges: int, build):
+    """``build()`` (a ``csr_broadcast`` of a graph with ``n_edges``
+    canonical edges) when ``ADJ_BC_MAX_EDGES`` admits the graph, else None
+    without calling it — the one gate of every CSR kernel arm. The
+    operators run their kernel iff they are handed a CSR, so past the
+    ceiling nothing reaches the driver."""
+    return build() if n_edges <= ADJ_BC_MAX_EDGES else None
+
+
 def copurchase_csr_gated(cat: Catalog):
-    """``copurchase_csr(cat)`` when ``ADJ_BC_MAX_EDGES`` admits the
-    co-purchase graph, else None — the one gate of the registry rows'
-    kernel arms, on the session-memoized edge count."""
+    """``csr_gated`` for the co-purchase graph, on the session-memoized
+    edge count: the session ``copurchase_csr(cat)`` or None — what the
+    registry rows pass as their kernel arms' ``csr``."""
     m, _w = copurchase_edge_stats(cat)
-    return copurchase_csr(cat) if m <= ADJ_BC_MAX_EDGES else None
+    return csr_gated(m, lambda: copurchase_csr(cat))
 
 
 def _match_counts_wedge_join(pairs: DataFrame) -> tuple[int, int]:
@@ -1478,7 +1443,7 @@ def _match_counts_wedge_join_on(p: DataFrame) -> tuple[int, int]:
     return int(tri_n), int(sq)
 
 
-def _match_counts_csr_kernel(pairs: DataFrame, csr=None) -> tuple[int, int]:
+def _match_counts_csr_kernel(pairs: DataFrame, csr) -> tuple[int, int]:
     """(triangles, four_cycles) by a broadcast-CSR counting kernel — the
     fits-in-a-broadcast strategy.
 
@@ -1503,14 +1468,14 @@ def _match_counts_csr_kernel(pairs: DataFrame, csr=None) -> tuple[int, int]:
     asymptotics as the join arm with broadcast-local constants. Only two
     partial-sum rows per task move over the wire — no pair shuffle at all.
     Identical counts to the join strategy (pytest pins equality on the
-    fixture); gated by ``ADJ_BC_MAX_EDGES`` because the broadcast is
-    O(|E|) — past the ceiling the wedge join takes over, mirroring the
-    ``STATE_BC_MAX_ROWS`` pattern."""
+    fixture). ``csr`` is the caller's ``csr_broadcast`` of ``pairs``; the
+    broadcast is O(|E|), so callers hand it over only below
+    ``ADJ_BC_MAX_EDGES`` (``csr_gated``) and release their own."""
     import numpy as np
     import pandas as pd
 
     spark = pairs.sparkSession
-    bc, n = csr_broadcast(pairs) if csr is None else csr
+    bc, n = csr
 
     def kern(pdf_iter):
         ip, nb = bc.value
@@ -1545,35 +1510,24 @@ def _match_counts_csr_kernel(pairs: DataFrame, csr=None) -> tuple[int, int]:
         .agg(F.sum("sq").alias("sq"), F.sum("tri").alias("tri"))
         .collect()[0]
     )
-    if csr is None:  # session-shared broadcasts outlive this call
-        bc.unpersist(blocking=False)
     return int(totals["tri"]) // 3, int(totals["sq"]) // 2
 
 
-def subgraph_match_counts(
-    pairs: DataFrame, adj_bc_max_edges: int = ADJ_BC_MAX_EDGES, csr=None
-) -> DataFrame:
+def subgraph_match_counts(pairs: DataFrame, csr=None) -> DataFrame:
     """Template match counts on the co-purchase graph → rows
     (template, matches) for the triangle and 4-cycle templates —
     ``SubgraphMatchingRunner.scala:82-94`` (``run(dataGraph, queryEdgeList,
     …, resultNum)`` returns match counts for small query graphs).
 
-    Strategy dispatch on |E|: a CSR-broadcast bincount kernel while the
-    adjacency provably fits a broadcast (dense-ish fixture graphs — no pair
-    shuffle), the wedge-enumeration join past the ceiling (sparse giant
-    graphs — work scales with actual wedge count, AQE handles skew). Both
-    produce identical exact counts."""
-    own = csr is None and pairs.storageLevel == StorageLevel.NONE
-    if own:
-        pairs = _cached(pairs)  # gate count + chosen arm share one pass
-    n_edges = pairs.count()
-    if n_edges <= adj_bc_max_edges:
-        tri_n, sq = _match_counts_csr_kernel(pairs, csr=csr)
+    With ``csr`` (a ``csr_broadcast`` of ``pairs``) the CSR-broadcast
+    counting kernel runs (no pair shuffle); without it, the
+    wedge-enumeration join (work scales with actual wedge count, AQE
+    handles skew — the path past ``csr_gated``'s ceiling). Both produce
+    identical exact counts."""
+    if csr is not None:
+        tri_n, sq = _match_counts_csr_kernel(pairs, csr)
     else:
         tri_n, sq = _match_counts_wedge_join(pairs)
-    if own:
-        # both arms return collected scalars — the gate cache is spent
-        pairs.unpersist(blocking=False)
     spark = pairs.sparkSession
     return spark.createDataFrame(
         [("triangle", tri_n), ("four_cycle", sq)], "template string, matches long"
@@ -1703,7 +1657,7 @@ def copurchase_edge_stats(cat: Catalog) -> tuple[int, float]:
         ).collect()[0]
         return (int(r["m"]), float(r["w"] or 0.0))
 
-    return _derived_scalar(cat, "copurchase_edge_stats", compute)
+    return _derived_obj(cat, "copurchase_edge_stats", compute)
 
 
 def graph_modularity(cat: Catalog) -> DataFrame:
@@ -1742,8 +1696,7 @@ def graph_degrees_nation(cat: Catalog) -> DataFrame:
 
 
 def graph_subgraph_matching(cat: Catalog) -> DataFrame:
-    # Share the CSR broadcast with sampled betweenness, but only when the
-    # kernel strategy would fire anyway (the gate re-checks inside).
+    # the session CSR is shared with the other kernel rows
     return subgraph_match_counts(
         copurchase_pairs(cat), csr=copurchase_csr_gated(cat)
     )

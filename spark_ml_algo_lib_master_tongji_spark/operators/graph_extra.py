@@ -338,12 +338,13 @@ def _louvain_local_move(
     Perf shape (round-4 rework, 35.8s → single-digit seconds at sf0.1):
     the loop state is the full ``(v, label, wv)`` relation — wdeg is part
     of the state, not re-joined every round — and the loop checkpoints
-    EVERY round. ce=2's lazy in-between persist is catastrophic for this
-    step because it references its state four times (sigma, the contrib
-    broadcast, the own-community rows, the score join): the first
-    broadcast-exchange job of round i+1 re-executes the whole un-
-    materialized round i before the persist populates, measured ~18s/round
-    vs ~2s/round with an eager per-round cut."""
+    EVERY round (as ``iterate`` always does). A lazy persist in between
+    cuts is catastrophic for this step because it references its state
+    four times (sigma, the contrib broadcast, the own-community rows, the
+    score join): the first broadcast-exchange job of round i+1
+    re-executes the whole unmaterialized round i before the persist
+    populates, measured ~18s/round vs ~2s/round with an eager per-round
+    cut."""
     if wdeg is None:
         wdeg = sym.groupBy(F.col("src").alias("v")).agg(F.sum("cnt").alias("wv"))
     state0 = wdeg.select("v", F.col("v").alias("label"), "wv")
@@ -422,7 +423,7 @@ def _louvain_local_move(
             F.min("wv").alias("wv"),
         )
 
-    return iterate(state0, step, rounds, checkpoint_every=1).select("v", "label")
+    return iterate(state0, step, rounds).select("v", "label")
 
 
 def louvain(cat: Catalog) -> DataFrame:
@@ -850,7 +851,6 @@ def betweenness_sampled(
     pairs: DataFrame,
     n_samples: int = BETW_SAMPLES,
     top_k: int = BETW_TOPK,
-    adj_bc_max_edges: int | None = None,
     csr=None,
     verts: DataFrame | None = None,
     n_verts: int | None = None,
@@ -871,39 +871,26 @@ def betweenness_sampled(
     bc(v) ≈ (n_sources_total/|S|)·Σ_{s∈S} δ_s(v) — unbiased for uniform
     samples; ties broken by vertex id for a stable top-k.
 
-    The CSR broadcast is O(|E|) through the driver, so the strategy is
-    gated on ``ADJ_BC_MAX_EDGES`` exactly like ``subgraph_match_counts``
-    (``graph.py``): past the ceiling this raises instead of OOM-ing the
-    driver — use the exact per-component ``betweenness`` (shuffle-only,
-    no driver materialization) or raise the ceiling on a driver sized
-    for it. ~8 bytes/edge ⇒ the default ceiling is a ~200 MB broadcast."""
+    ``csr`` is the caller's ``csr_broadcast`` of ``pairs``. The broadcast
+    is O(|E|) through the driver, so callers obtain it from ``csr_gated``
+    (``graph.py``), which hands out none past ``ADJ_BC_MAX_EDGES``. There
+    is no DataFrame arm: without ``csr`` this raises instead of OOM-ing
+    the driver — use the exact per-component ``betweenness`` (shuffle-only,
+    no driver materialization). ~8 bytes/edge ⇒ the ceiling is a ~200 MB
+    broadcast."""
     import numpy as np
     import pandas as pd
 
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        ADJ_BC_MAX_EDGES,
-        csr_broadcast,
-        vertices,
-    )
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import vertices
 
-    if adj_bc_max_edges is None:
-        adj_bc_max_edges = ADJ_BC_MAX_EDGES
-    # The gate count below plus csr_broadcast/vertices all scan ``pairs`` —
-    # persist it first unless the caller already did (registry callers pass
-    # the session-shared cached edge list, where this is a no-op guard).
-    from pyspark.storagelevel import StorageLevel
-
-    if pairs.storageLevel == StorageLevel.NONE:
-        pairs = _cached(pairs)
-    n_edges = pairs.count()
-    if n_edges > adj_bc_max_edges:
+    if csr is None:
         raise ValueError(
-            f"betweenness_sampled: {n_edges} edges exceed the CSR-broadcast "
-            f"ceiling ({adj_bc_max_edges}); use the exact per-component "
-            "betweenness() or raise adj_bc_max_edges on a larger driver"
+            "betweenness_sampled: no CSR adjacency — the graph is past the "
+            "CSR-broadcast ceiling (ADJ_BC_MAX_EDGES); use the exact "
+            "per-component betweenness()"
         )
     spark = pairs.sparkSession
-    bc, n = csr_broadcast(pairs) if csr is None else csr
+    bc, n = csr
     if verts is None:
         # standalone callers derive the vertex set privately; registry
         # callers pass the session-shared relation + memoized count so the
@@ -1020,7 +1007,7 @@ def graph_betweenness_sampled(cat: Catalog) -> DataFrame:
     )
 
     # Session-shared CSR (also used by subgraph matching) when the gate
-    # admits it; the in-function gate still enforces the ceiling. The
+    # admits it; past the ceiling it is None and the operator raises. The
     # vertex set + count are likewise the session-shared derivations
     # (round-6 verdict item 6 — no private distinct scan per call).
     return betweenness_sampled(
@@ -1101,6 +1088,7 @@ def _betweenness_overlap_metrics(cat: Catalog) -> tuple[int, int, int, float]:
     from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
         copurchase_pairs,
         csr_broadcast,
+        csr_gated,
     )
 
     mod = _betw_overlap_mod(cat)
@@ -1122,7 +1110,8 @@ def _betweenness_overlap_metrics(cat: Catalog) -> tuple[int, int, int, float]:
         k = min(BETW_OVERLAP_K, n_verts)
         if k == 0:
             return 0, 0, 0, 1.0
-        csr = csr_broadcast(pairs)
+        # past the ceiling csr is None and betweenness_sampled raises
+        csr = csr_gated(n_edges, lambda: csr_broadcast(pairs))
         try:
             sampled = betweenness_sampled(
                 pairs,
@@ -1143,7 +1132,8 @@ def _betweenness_overlap_metrics(cat: Catalog) -> tuple[int, int, int, float]:
             sv = {r["v"] for r in sampled.select("v").collect()}
             ev = {r["v"] for r in exact.select("v").collect()}
         finally:
-            csr[0].destroy(blocking=False)
+            if csr is not None:
+                csr[0].destroy(blocking=False)
         return int(n_verts), int(n_edges), int(k), len(sv & ev) / float(k)
     finally:
         pairs.unpersist(blocking=False)

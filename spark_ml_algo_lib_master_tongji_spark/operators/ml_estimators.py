@@ -100,9 +100,7 @@ def _shared_clf_acc(cat: Catalog, key: str, label_col: str, fit) -> float:
     plain metric query and the ``ml_est_clf_acc_anchors`` row consume the
     SAME fit's scalar (the ``_kmeans_est_cost`` load-once-run-many
     pattern; one fit + one agg per (session, sf_dir, model))."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
 
     def compute() -> float:
         df = _features(cat)
@@ -118,24 +116,20 @@ def _shared_clf_acc(cat: Catalog, key: str, label_col: str, fit) -> float:
         )
         return round(float(row["acc"]), 4)
 
-    return _derived_scalar(cat, key, compute)
+    return _derived_obj(cat, key, compute)
 
 
 def _features_n(cat: Catalog) -> int:
     """Session-shared row count of the feature relation."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
 
-    return int(_derived_scalar(cat, "ml_features_n", lambda: float(_features(cat).count())))
+    return int(_derived_obj(cat, "ml_features_n", lambda: float(_features(cat).count())))
 
 
 def _shared_reg_rmse(cat: Catalog, key: str, label_col: str, fit) -> float:
     """Session-shared train RMSE of a seeded regressor fit (see
     ``_shared_clf_acc``)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
 
     def compute() -> float:
         df = _features(cat)
@@ -148,7 +142,7 @@ def _shared_reg_rmse(cat: Catalog, key: str, label_col: str, fit) -> float:
         )
         return round(float(row["rmse"]), 4)
 
-    return _derived_scalar(cat, key, compute)
+    return _derived_obj(cat, key, compute)
 
 
 def _mllib_emb_rdd(cat: Catalog):
@@ -279,9 +273,7 @@ def _kmeans_est_cost(cat: Catalog) -> float:
     ml_est_kmeans and the ml_est_kmeans_wssse anchor consume the SAME
     fitted model's WSSSE — the reference's load-once-run-many lifecycle
     (``KMeansRunner.scala:132``) instead of two identical 10-iter fits."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
 
     def fit() -> float:
         model = KMeans(
@@ -289,7 +281,7 @@ def _kmeans_est_cost(cat: Catalog) -> float:
         ).fit(_features(cat))
         return float(model.summary.trainingCost)
 
-    return _derived_scalar(cat, "kmeans_est_wssse", fit)
+    return _derived_obj(cat, "kmeans_est_wssse", fit)
 
 
 def ml_est_kmeans(cat: Catalog) -> DataFrame:
@@ -351,7 +343,10 @@ def ml_est_kmeans_wssse(cat: Catalog) -> DataFrame:
         round_half_up,
         round_half_up_f,
     )
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _OBJ_CACHE
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
+        _OBJ_CACHE,
+        _cache_key,
+    )
     from spark_ml_algo_lib_master_tongji_spark.operators.ml_exact import (
         KMEANS_K,
         _dist2,
@@ -360,11 +355,7 @@ def ml_est_kmeans_wssse(cat: Catalog) -> DataFrame:
     )
 
     assign = kmeans_lloyd(cat)  # session-shared; memoizes final centers
-    key = (
-        cat.spark.sparkContext.applicationId,
-        cat.sf_dir,
-        f"kmeans_centers_k{KMEANS_K}",
-    )
+    key = _cache_key(cat, f"kmeans_centers_k{KMEANS_K}")
     if key not in _OBJ_CACHE:  # relational fallback built the assignment:
         # impossible below CENTERS_BC_MAX_ROWS (k=8 ≪ 100k), which every
         # fixture satisfies; fail loudly rather than re-deriving centers
@@ -1530,9 +1521,7 @@ def _gbt_pipeline_acc(cat: Catalog) -> float:
     """Session-shared accuracy of the full 4-stage GBDT pipeline fit —
     ``ml_est_gbt_pipeline`` and the clf-anchor row consume the same
     fit's scalar."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        _derived_scalar,
-    )
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _derived_obj
 
     def compute() -> float:
         from pyspark.ml.feature import (
@@ -1595,7 +1584,7 @@ def _gbt_pipeline_acc(cat: Catalog) -> float:
             prepared.unpersist(blocking=False)
         return round(float(row["acc"]), 4)
 
-    return _derived_scalar(cat, "gbt_pipeline_acc", compute)
+    return _derived_obj(cat, "gbt_pipeline_acc", compute)
 
 
 def ml_est_gbt_pipeline(cat: Catalog) -> DataFrame:

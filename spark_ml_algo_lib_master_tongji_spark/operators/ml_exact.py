@@ -400,11 +400,12 @@ def _kmeans_lloyd_build(
         spent.append(bc)
     # Final centers are memoized for the bench agreement scalar
     # (``lloyd_ivf_agreement``) — k×dim doubles, session lifecycle.
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _OBJ_CACHE
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
+        _OBJ_CACHE,
+        _cache_key,
+    )
 
-    _OBJ_CACHE[
-        (cat.spark.sparkContext.applicationId, cat.sf_dir, f"kmeans_centers_k{k}")
-    ] = (cids, cmat)
+    _OBJ_CACHE[_cache_key(cat, f"kmeans_centers_k{k}")] = (cids, cmat)
     out, _final_bc = assign_arm(points, cids, cmat)
     # intermediate center broadcasts are spent (their updates collected);
     # the final one must stay alive — `out` references it lazily and
@@ -429,9 +430,12 @@ def lloyd_ivf_agreement(
     if n_probes is None:
         n_probes = LLOYD_IVF_NPROBES
     kmeans_lloyd(cat, k)  # shared derivation — also memoizes final centers
-    key = (cat.spark.sparkContext.applicationId, cat.sf_dir, f"kmeans_centers_k{k}")
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _OBJ_CACHE
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
+        _OBJ_CACHE,
+        _cache_key,
+    )
 
+    key = _cache_key(cat, f"kmeans_centers_k{k}")
     if key not in _OBJ_CACHE:  # relational-fallback arm: no driver centers
         raise ValueError(f"no driver-side centers for k={k}")
     cids, cmat = _OBJ_CACHE[key]

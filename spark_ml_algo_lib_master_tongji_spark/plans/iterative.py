@@ -4,16 +4,16 @@ shuffle-cleanup loops of the reference (``SimRankOpenSource.scala:128-150``).
 
 Every iterative graph/ML algorithm in this engine funnels through
 ``iterate``: the step function maps state-DataFrame → state-DataFrame, and
-the loop caches each new state and periodically truncates lineage.  Without
+the loop eagerly checkpoints each new state, truncating its lineage.  Without
 truncation an N-iteration DataFrame loop builds an N-deep logical plan —
 analysis time grows superlinearly and the driver eventually OOMs on plan
 objects (SURVEY.md §7 risk (2)).
 
 Scale notes: ``localCheckpoint`` keeps the truncated state in executor
 block-manager storage (no HDFS round-trip) which is right for local[*] and
-still correct on a cluster as long as executors are stable; for very long
-multi-hour cluster runs pass ``reliable=True`` after
-``sc.setCheckpointDir`` to survive executor loss.
+still correct on a cluster as long as executors are stable; a lost
+executor loses its checkpointed blocks, so a loop that must survive
+executor loss needs reliable checkpoints, which this loop does not take.
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 
 class NotConvergedError(RuntimeError):
@@ -34,47 +33,36 @@ def iterate(
     state: DataFrame,
     step: Callable[[DataFrame, int], DataFrame],
     n_iter: int,
-    checkpoint_every: int = 1,
-    reliable: bool = False,
     verify_fixpoint: Callable[[DataFrame, DataFrame], bool] | None = None,
     early_stop: Callable[[DataFrame, DataFrame], bool] | None = None,
 ) -> DataFrame:
     """Run ``state = step(state, i)`` for ``n_iter`` rounds with lineage
     control.
 
-    The state is *eagerly* checkpointed every ``checkpoint_every`` rounds;
-    in-between rounds are persisted lazily (MEMORY_AND_DISK). Default 1
-    (round-4 correction of the round-3 ce=2 claim, which did not hold up
-    under isolated re-measurement): with a lazy in-between persist, the
-    next round's broadcast-exchange job is the FIRST thing to execute the
-    unmaterialized round — a driver-side collect path with AQE re-planning
-    of the nested chain — measured 8.2s vs 4.7s for the 8-round PageRank
-    loop and ~18s/round vs ~2s for Louvain's four-reference step at sf0.1.
-    An eager per-round cut materializes with full parallelism and the
-    broadcast then reads cached rows. Eager truncation is also what keeps
-    the plan shallow: an un-truncated N-round loop builds an N-deep plan —
-    superlinear analysis time, driver OOM on plan objects (SURVEY.md §7
-    risk (2)); this mirrors the reference's per-iteration materialize +
-    shuffle cleanup (``SimRankOpenSource.scala:128-150``)."""
+    Every round's state is *eagerly* checkpointed (round-4 correction of
+    the round-3 claim that a cut every second round was cheaper, which
+    did not hold up under isolated re-measurement): with a lazy persist
+    in between cuts, the next round's broadcast-exchange job is the FIRST
+    thing to execute the unmaterialized round — a driver-side collect
+    path with AQE re-planning of the nested chain — measured 8.2s vs 4.7s
+    for the 8-round PageRank loop and ~18s/round vs ~2s for Louvain's
+    four-reference step at sf0.1. An eager per-round cut materializes
+    with full parallelism and the broadcast then reads cached rows.
+    Eager truncation is also what keeps the plan shallow: an un-truncated
+    N-round loop builds an N-deep plan — superlinear analysis time, driver
+    OOM on plan objects (SURVEY.md §7 risk (2)); this mirrors the
+    reference's per-iteration materialize + shuffle cleanup
+    (``SimRankOpenSource.scala:128-150``)."""
     probe = verify_fixpoint if verify_fixpoint is not None else early_stop
     prev: DataFrame | None = None
     for i in range(n_iter):
-        state = step(state, i)
-        is_cut = (i + 1) % checkpoint_every == 0 or i == n_iter - 1
-        if is_cut:
-            if reliable:
-                state = state.checkpoint(eager=True)
-            else:
-                state = state.localCheckpoint(eager=True)
-        else:
-            state = state.persist(StorageLevel.MEMORY_AND_DISK)
-        if probe is not None and prev is not None and is_cut:
+        state = step(state, i).localCheckpoint(eager=True)
+        if probe is not None and prev is not None:
             # Early termination (round 4): ``prev`` is the ADJACENT previous
-            # round's state — lazily persisted in between cuts, and just
-            # materialized as a byproduct of this round's checkpoint job —
-            # so the comparison reads two cached relations. Adjacent-equal
-            # states are a PROVEN fixed point (steps are stationary), every
-            # remaining round is a no-op, and the result is bit-identical
+            # round's checkpointed state, so the comparison reads two
+            # materialized relations. Adjacent-equal states are a PROVEN
+            # fixed point (steps are stationary), every remaining round
+            # is a no-op, and the result is bit-identical
             # to the oracle's full ``n_iter`` unroll — returning now both
             # skips the dead rounds (the nation-graph CC budget spent 7 of
             # its 10 rounds converged) and discharges the fixpoint guard
@@ -95,8 +83,8 @@ def iterate(
         # rounds, so an unconverged loop would agree with its oracle while
         # both diverge from the reference's run-to-convergence semantics —
         # this turns that silent divergence into a loud error. The loop
-        # above never observed an adjacent-equal pair at a cut, so one
-        # probe superstep must be a no-op.
+        # above never observed an adjacent-equal pair, so one probe
+        # superstep must be a no-op.
         if not verify_fixpoint(state, step(state, n_iter)):
             raise NotConvergedError(
                 f"state still changing after {n_iter} rounds; raise the "

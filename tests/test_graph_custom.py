@@ -5,11 +5,26 @@ top-k set methodology (``BetweennessRunner.scala:92-99``)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+
+
+@contextmanager
+def _csr(pairs):
+    """A ``csr_broadcast`` of ``pairs`` for the kernel arms, released on
+    exit (kernels run iff they are handed one)."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+
+    csr = graph.csr_broadcast(pairs)
+    try:
+        yield csr
+    finally:
+        csr[0].unpersist(blocking=False)
 
 
 @pytest.fixture(scope="module")
@@ -153,7 +168,8 @@ def test_subgraph_matching_strategies_agree(cat):
     from spark_ml_algo_lib_master_tongji_spark.operators import graph
 
     pairs = graph.copurchase_pairs(cat)
-    tri_k, sq_k = graph._match_counts_csr_kernel(pairs)
+    with _csr(pairs) as csr:
+        tri_k, sq_k = graph._match_counts_csr_kernel(pairs, csr)
     tri_j, sq_j = graph._match_counts_wedge_join(pairs)
     assert (tri_k, sq_k) == (tri_j, sq_j)
     assert tri_k > 0 and sq_k > 0
@@ -166,7 +182,8 @@ def test_triangle_strategies_agree(cat):
     from spark_ml_algo_lib_master_tongji_spark.operators import graph
 
     pairs = graph.copurchase_pairs(cat)
-    k = graph._triangles_csr_kernel(pairs).orderBy("v").collect()
+    with _csr(pairs) as csr:
+        k = graph._triangles_csr_kernel(pairs, csr).orderBy("v").collect()
     j = graph._triangles_wedge_join(pairs).orderBy("v").collect()
     assert [tuple(r) for r in k] == [tuple(r) for r in j]
     assert sum(r["triangles"] for r in k) > 0
@@ -189,19 +206,22 @@ def test_betweenness_sampled_topk_overlap(cat):
     pairs = copurchase_pairs(cat)
     n_verts = vertices(pairs.withColumn("cnt", F.lit(1))).count()
     k = 20
-    exact = betweenness_sampled(pairs, n_samples=n_verts, top_k=k)
-    est = betweenness_sampled(pairs, n_samples=64, top_k=k)
-    exact_top = {r["v"] for r in exact.collect()}
-    est_top = {r["v"] for r in est.collect()}
+    with _csr(pairs) as csr:
+        exact = betweenness_sampled(pairs, n_samples=n_verts, top_k=k, csr=csr)
+        est = betweenness_sampled(pairs, n_samples=64, top_k=k, csr=csr)
+        exact_top = {r["v"] for r in exact.collect()}
+        est_top = {r["v"] for r in est.collect()}
     overlap = len(exact_top & est_top) / k
     assert overlap >= 0.5, f"top-{k} overlap {overlap}"
 
 
-def test_betweenness_sampled_gate_refuses_oversized_broadcast(spark):
+def test_betweenness_sampled_gate_refuses_oversized_broadcast(spark, monkeypatch):
     """The CSR adjacency rides a driver broadcast — past ADJ_BC_MAX_EDGES
-    the operator must refuse loudly instead of materializing the edge list
-    on the driver (round-2 ADVICE: the gate existed for subgraph matching
-    but not here)."""
+    the one gate hands out no CSR (without building it), and the operator,
+    which has no DataFrame arm, must then refuse loudly instead of
+    materializing the edge list on the driver (round-2 ADVICE: the gate
+    existed for subgraph matching but not here)."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
     from spark_ml_algo_lib_master_tongji_spark.operators.graph_extra import (
         betweenness_sampled,
     )
@@ -209,8 +229,31 @@ def test_betweenness_sampled_gate_refuses_oversized_broadcast(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "src long, dst long"
     )
+    monkeypatch.setattr(graph, "ADJ_BC_MAX_EDGES", 2)
+    assert graph.csr_gated(3, lambda: pytest.fail("built past the ceiling")) is None
     with pytest.raises(ValueError, match="CSR-broadcast ceiling"):
-        betweenness_sampled(pairs, adj_bc_max_edges=2).collect()
+        betweenness_sampled(pairs, csr=None)
+
+
+def test_betweenness_overlap_refuses_past_ceiling_before_broadcast(spark, monkeypatch):
+    """The overlap anchor gates its subgraph on the edge count it already
+    has: past ADJ_BC_MAX_EDGES it raises without ever collecting the
+    subgraph into a CSR broadcast on the driver."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph, graph_extra
+    from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog
+
+    built = []
+    real = graph.csr_broadcast
+
+    def recording_csr_broadcast(pairs):
+        built.append(pairs)
+        return real(pairs)
+
+    monkeypatch.setattr(graph, "csr_broadcast", recording_csr_broadcast)
+    monkeypatch.setattr(graph, "ADJ_BC_MAX_EDGES", 0)
+    with pytest.raises(ValueError, match="CSR-broadcast ceiling"):
+        graph_extra._betweenness_overlap_metrics(Catalog(spark, SF_SMOKE))
+    assert built == []
 
 
 def test_betweenness_component_grouping(spark):
@@ -262,12 +305,13 @@ def test_csr_kernels_subquadratic_on_sparse_many_vertex_graph(spark):
         "cnt", F.lit(1)
     )
     t0 = time.perf_counter()
-    tri_per_vertex = graph._triangles_csr_kernel(pairs)
-    per_v = {
-        r["v"]: r["triangles"]
-        for r in tri_per_vertex.where(F.col("triangles") > 0).collect()
-    }
-    tri_n, sq = graph._match_counts_csr_kernel(pairs)
+    with _csr(pairs) as csr:
+        tri_per_vertex = graph._triangles_csr_kernel(pairs, csr)
+        per_v = {
+            r["v"]: r["triangles"]
+            for r in tri_per_vertex.where(F.col("triangles") > 0).collect()
+        }
+        tri_n, sq = graph._match_counts_csr_kernel(pairs, csr)
     elapsed = time.perf_counter() - t0
     assert per_v == {0: 1, 1: 1, 2: 1}
     assert (tri_n, sq) == (1, 1)
@@ -281,30 +325,27 @@ def test_derived_caches_evict_dead_sessions():
     pinned O(|E|) numpy arrays for the process lifetime)."""
     from spark_ml_algo_lib_master_tongji_spark.operators import graph
 
-    graph._SCALAR_CACHE[("dead-app", "sf", "x")] = 1
+    graph._OBJ_CACHE[("dead-app", "sf", "x")] = 1
     graph._DERIV_CACHE[("dead-app", "sf", "y")] = object()
     graph._OBJ_CACHE[("dead-app", "sf", "z")] = object()
     graph._evict_dead_sessions("live-app")
     assert not any(
-        k[0] == "dead-app"
-        for c in (graph._SCALAR_CACHE, graph._DERIV_CACHE, graph._OBJ_CACHE)
-        for k in c
+        k[0] == "dead-app" for c in (graph._DERIV_CACHE, graph._OBJ_CACHE) for k in c
     )
 
 
-def test_min_plus_closure_arms_agree(cat):
+def test_min_plus_closure_arms_agree(cat, monkeypatch):
     """The size-gated local Floyd-Warshall arm and the distributed min-plus
     doubling loop are two physical strategies for the same exact closure —
     pin row-for-row equality on the nation trade graph, and negative-test
-    the gate (tiny_max_edges=0 must route to the distributed loop)."""
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
-        min_plus_closure,
-        nation_trade_edges,
-    )
+    the gate (a TINY_CLOSURE_MAX_EDGES of 0 must route to the distributed
+    loop)."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
 
-    edges = nation_trade_edges(cat)
-    local = min_plus_closure(edges)  # gate admits the 25-vertex graph
-    dist = min_plus_closure(edges, tiny_max_edges=0)  # forced scale arm
+    edges = graph.nation_trade_edges(cat)
+    local = graph.min_plus_closure(edges)  # gate admits the 25-vertex graph
+    monkeypatch.setattr(graph, "TINY_CLOSURE_MAX_EDGES", 0)
+    dist = graph.min_plus_closure(edges)  # forced scale arm
     key = lambda r: (r["src"], r["dst"])  # noqa: E731
     lrows = sorted((tuple(r) for r in local.collect()), key=lambda t: t[:2])
     drows = sorted((tuple(r) for r in dist.collect()), key=lambda t: t[:2])
@@ -336,12 +377,14 @@ def test_triangle_kernels_match_dense_matrix_oracle(spark, seed):
     sq_oracle = int((A2[iu] * (A2[iu] - 1) // 2).sum()) // 2
     tri_oracle = int(tri_vec.sum()) // 3
 
-    k = {r["v"]: r["triangles"] for r in graph._triangles_csr_kernel(pairs).collect()}
+    with _csr(pairs) as csr:
+        k = {r["v"]: r["triangles"] for r in graph._triangles_csr_kernel(pairs, csr).collect()}
+        kern_counts = graph._match_counts_csr_kernel(pairs, csr)
     j = {r["v"]: r["triangles"] for r in graph._triangles_wedge_join(pairs).collect()}
     expect = {v: int(tri_vec[v]) for v in set(srcs) | set(dsts)}
     assert k == expect
     assert j == expect
-    assert graph._match_counts_csr_kernel(pairs) == (tri_oracle, sq_oracle)
+    assert kern_counts == (tri_oracle, sq_oracle)
     assert graph._match_counts_wedge_join(pairs) == (tri_oracle, sq_oracle)
 
 
@@ -380,11 +423,11 @@ def test_min_plus_closure_local_matches_dense_oracle(spark, seed):
 
 
 def test_gate_caches_released_after_materializing_arms(spark):
-    """The dispatch gates persist an uncached input to share the gate
-    count with the chosen arm; arms that fully materialize before
-    returning (local closure, CSR kernel, scalar match counts) must
-    release that cache — a standalone scc/closeness/matching call may
-    not pin an edge-list copy for the session (round-5 review)."""
+    """The closure gate persists an uncached input to share the gate
+    count with the chosen arm, and the match-count join caches its
+    projection; both materialize before returning and must release what
+    they cached — a standalone scc/closeness/matching call may not pin an
+    edge-list copy for the session (round-5 review)."""
     from pyspark.storagelevel import StorageLevel
 
     from spark_ml_algo_lib_master_tongji_spark.operators import graph

@@ -394,14 +394,12 @@ def test_kmeans_ivf_assign_exact_when_all_cells_probed(cat):
 
     pts = ml_exact._points_shared(cat)
     exact = ml_exact.kmeans_lloyd(cat)  # builds + memoizes final centers
-    key = (
-        cat.spark.sparkContext.applicationId,
-        cat.sf_dir,
-        f"kmeans_centers_k{ml_exact.KMEANS_K}",
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
+        _OBJ_CACHE,
+        _cache_key,
     )
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _OBJ_CACHE
 
-    cids, cmat = _OBJ_CACHE[key]
+    cids, cmat = _OBJ_CACHE[_cache_key(cat, f"kmeans_centers_k{ml_exact.KMEANS_K}")]
     flat, b1 = ml_exact._kmeans_assign_np(pts, cids, cmat)
     ivf, b2 = ml_exact._kmeans_assign_ivf(pts, cids, cmat, 10**9)
     want = sorted((r["vec_id"], r["cid"]) for r in flat.collect())
@@ -435,15 +433,12 @@ def test_kmeans_ivf_assign_low_probe_budget_quality(cat):
 
     pts = ml_exact._points_shared(cat)
     ml_exact.kmeans_lloyd(cat)
-    from spark_ml_algo_lib_master_tongji_spark.operators.graph import _OBJ_CACHE
+    from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
+        _OBJ_CACHE,
+        _cache_key,
+    )
 
-    cids, cmat = _OBJ_CACHE[
-        (
-            cat.spark.sparkContext.applicationId,
-            cat.sf_dir,
-            f"kmeans_centers_k{ml_exact.KMEANS_K}",
-        )
-    ]
+    cids, cmat = _OBJ_CACHE[_cache_key(cat, f"kmeans_centers_k{ml_exact.KMEANS_K}")]
     flat, b1 = ml_exact._kmeans_assign_np(pts, cids, cmat)
     ivf, b2 = ml_exact._kmeans_assign_ivf(pts, cids, cmat, 1)
     a = {r["vec_id"]: r["cid"] for r in flat.collect()}
@@ -470,11 +465,7 @@ def test_anchor_fits_are_shared_with_rows_only_twins(spark):
     cat = Catalog(spark, SF_SMOKE)
     m.ml_est_clf_acc_anchors(cat).collect()
     m.ml_est_reg_rmse_anchors(cat).collect()
-    keys_after_anchors = (
-        set(graph._DERIV_CACHE)
-        | set(graph._SCALAR_CACHE)
-        | set(graph._OBJ_CACHE)
-    )
+    keys_after_anchors = set(graph._DERIV_CACHE) | set(graph._OBJ_CACHE)
     for twin in (
         m.ml_est_dt_classifier,
         m.ml_est_rf_classifier,
@@ -487,11 +478,7 @@ def test_anchor_fits_are_shared_with_rows_only_twins(spark):
         m.ml_est_gbt_regressor,
     ):
         twin(cat).collect()
-    keys_after_twins = (
-        set(graph._DERIV_CACHE)
-        | set(graph._SCALAR_CACHE)
-        | set(graph._OBJ_CACHE)
-    )
+    keys_after_twins = set(graph._DERIV_CACHE) | set(graph._OBJ_CACHE)
     fresh = sorted(k[2] for k in keys_after_twins - keys_after_anchors)
     assert not fresh, f"rows-only twins re-derived after anchors: {fresh}"
 

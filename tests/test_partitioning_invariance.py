@@ -30,7 +30,7 @@ def _clear_session_caches(spark) -> None:
     from spark_ml_algo_lib_master_tongji_spark.operators import graph as G
 
     app = spark.sparkContext.applicationId
-    for cache in (G._DERIV_CACHE, G._SCALAR_CACHE, G._OBJ_CACHE):
+    for cache in (G._DERIV_CACHE, G._OBJ_CACHE):
         for k in [k for k in cache if k[0] == app]:
             del cache[k]
     spark.catalog.clearCache()
