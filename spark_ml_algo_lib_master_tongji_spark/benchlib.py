@@ -84,7 +84,7 @@ _region_total = 0.0
 @contextlib.contextmanager
 def load_timer(name: str):
     """Time a derivation build; only the OUTERMOST build on this thread
-    records (builds nest — ``copurchase_pairs`` touches ``sym_copurchase``
+    records (builds nest — ``copurchase_verts`` touches ``sym_copurchase``
     inside its own build — and recording both would double-count the
     shared load). ``name`` labels the build for tracing wrappers."""
     global _active_builds, _region_start, _region_total

@@ -85,7 +85,9 @@ def _perm_cols() -> list:
 
 
 def minhash_signatures(
-    docs: DataFrame, num_perm: int = NUM_PERM, shingles: DataFrame | None = None
+    docs: DataFrame | None,
+    num_perm: int = NUM_PERM,
+    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, sig array<string>) — sig[p] = min over shingles of the p-th
     permutation hash.
@@ -95,7 +97,8 @@ def minhash_signatures(
     functions fall back to interpreted eval and ran ~5× slower); partial
     aggregation shrinks the shuffle to one row per (partition, doc).
     Pass ``shingles`` (a cached ``shingle_sets`` result) to reuse one
-    shingle pass across the signature and exact-verify stages."""
+    shingle pass across the signature and exact-verify stages; ``docs``
+    is then unused and may be None."""
     assert num_perm == NUM_PERM, "signature layout is fixed at 8 perms"
     if shingles is None:
         shingles = shingle_sets(docs)
@@ -183,7 +186,6 @@ def doc_shingles(cat: Catalog) -> DataFrame:
 
 
 def _minhash_pairs_build(cat: Catalog) -> DataFrame:
-    docs = spread(cat.documents.select("doc_id", "text"))
     # signatures and shingle sets each feed two plan branches (both sides of
     # the self-join / both pair endpoints); the session-shared derivation
     # makes the md5 pipeline run once per session — the reference persists
@@ -191,7 +193,7 @@ def _minhash_pairs_build(cat: Catalog) -> DataFrame:
     # DTRunner.scala:227). The signature stage reads the SAME cached
     # shingle sets the exact-verify stage uses.
     sh = doc_shingles(cat)
-    sigs = minhash_signatures(docs, shingles=sh).persist()
+    sigs = minhash_signatures(None, shingles=sh).persist()
     cand = lsh_candidate_pairs(sigs)
     j = (
         cand.join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")

@@ -399,13 +399,17 @@ def _kmeans_lloyd_build(
         cids, cmat = to_mat(_kmeans_update(assign).collect())
         spent.append(bc)
     # Final centers are memoized for the bench agreement scalar
-    # (``lloyd_ivf_agreement``) — k×dim doubles, session lifecycle.
+    # (``lloyd_ivf_agreement``) — k×dim doubles, session lifecycle. The
+    # write goes under _CACHE_GUARD: _evict_dead_sessions iterates
+    # _OBJ_CACHE under it, and the anchor fits run from a thread pool.
     from spark_ml_algo_lib_master_tongji_spark.operators.graph import (
+        _CACHE_GUARD,
         _OBJ_CACHE,
         _cache_key,
     )
 
-    _OBJ_CACHE[_cache_key(cat, f"kmeans_centers_k{k}")] = (cids, cmat)
+    with _CACHE_GUARD:
+        _OBJ_CACHE[_cache_key(cat, f"kmeans_centers_k{k}")] = (cids, cmat)
     out, _final_bc = assign_arm(points, cids, cmat)
     # intermediate center broadcasts are spent (their updates collected);
     # the final one must stay alive — `out` references it lazily and

@@ -48,16 +48,71 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and predicate pushdown for free; callers filter/select on the result and
     the plan shows ``PushedFilters``/``ReadSchema`` trimmed accordingly.
 
+    The schema is inferred once per file version (``_parquet_schema``);
+    later reads pass it to ``spark.read.schema``, so they run no
+    schema-inference job.
+
     ``events.ts`` has shipped as both TIMESTAMP(NANOS) parquet (which
     Spark's vectorized reader rejects — read as long via ``nanosAsLong``
     and floor-divide to microseconds, the same ns→µs truncation DuckDB
     applies) and as plain µs TIMESTAMP (usable as-is). Normalize on dtype,
     not fixture vintage, so both generations of the fixture scan clean."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        return normalize_event_ts(df)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return normalize_event_ts(_read_parquet(spark, path))
+    return _read_parquet(spark, path)
+
+
+#: session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: absolute path → (file version, inferred schema) of its last inference;
+#: one get and one set per read, so concurrent readers at worst infer twice
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _file_version(path: str) -> tuple:
+    """(relative path, size, mtime_ns) of ``path`` or, for a directory, of
+    every entry below it: a rewrite changes the tuple."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((".", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version and inference conf — keyed on absolute path, size and
+    ``mtime_ns`` — and passes it to ``spark.read.schema`` on later reads,
+    so they run no schema-inference job. A path ``os.stat`` cannot read
+    (missing, or not on a local filesystem) is read uncached, and Spark
+    reports its own error."""
+    path = os.path.abspath(path)
+    try:
+        version = _file_version(path)
+    except OSError:
+        return spark.read.parquet(path)
+    version += tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == version:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (version, df.schema)
+    return df
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -91,9 +146,11 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
 class Catalog:
     """Lazy handle to the fixture star schema at one scale-factor dir.
 
-    Accessing ``cat.lineitem`` etc. returns the DataFrame; nothing is cached
-    or materialized here — plans stay fully declarative so Catalyst can push
-    filters into each scan independently per query.
+    Accessing ``cat.lineitem`` etc. returns a fresh scan DataFrame
+    (``load_table``); no rows are cached or materialized here — plans stay
+    fully declarative so Catalyst can push filters into each scan
+    independently per query. Only each table's schema is remembered, per
+    file version, so a repeated access runs no schema-inference job.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):

@@ -15,6 +15,21 @@ SF_ORACLE = "/root/testdata/sf0.01"
 SF_10X = str(REPO / "testdata_sf1m")
 
 
+def spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), read through a job group of
+    its own and the status tracker."""
+    import uuid
+
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from spark_ml_algo_lib_master_tongji_spark.session import get_session

@@ -443,3 +443,109 @@ def test_gate_caches_released_after_materializing_arms(spark):
     ).withColumn("cnt", F.lit(1))
     graph.subgraph_match_counts(pairs).collect()
     assert pairs.storageLevel == StorageLevel.NONE
+
+
+def _write_lineitem(spark, sf_dir, rows) -> None:
+    """A lineitem table of (l_orderkey, l_partkey) rows under ``sf_dir``."""
+    spark.createDataFrame(rows, "l_orderkey long, l_partkey long").write.parquet(
+        str(sf_dir / "lineitem.parquet")
+    )
+
+
+def _copurchase_stats_first_principles(rows) -> tuple[int, float]:
+    """(m, w) of the co-purchase graph from raw (order, part) rows: every
+    pair of lineitem rows of one order with parts x < y adds 1 to the
+    weight of edge (x, y)."""
+    from collections import Counter, defaultdict
+    from itertools import combinations
+
+    by_order = defaultdict(list)
+    for ok, part in rows:
+        by_order[ok].append(part)
+    cnt = Counter(
+        (min(x, y), max(x, y))
+        for parts in by_order.values()
+        for x, y in combinations(parts, 2)
+        if x != y
+    )
+    return len(cnt), float(sum(cnt.values()))
+
+
+def _drop_session_caches_of(sf_dir) -> None:
+    """Release the session-shared derivations built over ``sf_dir``."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+
+    with graph._CACHE_GUARD:
+        for cache in (graph._DERIV_CACHE, graph._OBJ_CACHE):
+            for k in [k for k in cache if k[1] == str(sf_dir)]:
+                v = cache.pop(k)
+                if hasattr(v, "unpersist"):
+                    v.unpersist(blocking=False)
+                elif k[2] == "copurchase_csr":
+                    v[0].unpersist(blocking=False)
+
+
+def test_edge_stats_match_the_canonical_pairs(cat):
+    """``copurchase_edge_stats`` comes out of the job that fills the
+    ``sym_copurchase`` cache; it must equal a separate count/sum over the
+    canonical pairs and the first-principles stats of raw lineitem."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+
+    m, w = graph.copurchase_edge_stats(cat)
+    r = graph.copurchase_pairs(cat).agg(
+        F.count(F.lit(1)).alias("m"), F.sum("cnt").alias("w")
+    ).first()
+    assert (m, w) == (r["m"], float(r["w"]))
+    li = cat.lineitem.select("l_orderkey", "l_partkey").collect()
+    assert (m, w) == _copurchase_stats_first_principles(map(tuple, li))
+    assert w > m  # the fixture has parallel edges
+
+
+def test_edge_stats_with_parallel_edges(spark, tmp_path):
+    """On a small graph with parallel edges (w ≠ m) and a part repeated
+    inside one order (a self pair, dropped), the stats and the canonical
+    pairs agree with the first-principles counts."""
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+    from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog
+
+    rows = [(1, 1), (1, 2), (1, 3), (2, 1), (2, 2), (3, 2), (3, 2), (3, 4),
+            (4, 5)]
+    _write_lineitem(spark, tmp_path, rows)
+    cat = Catalog(spark, str(tmp_path))
+    try:
+        # (1,2) twice, (2,4) twice from the repeated part 2 of order 3
+        assert graph.copurchase_edge_stats(cat) == (4, 6.0)
+        assert _copurchase_stats_first_principles(rows) == (4, 6.0)
+        assert sorted(map(tuple, graph.copurchase_pairs(cat).collect())) == [
+            (1, 2, 2), (1, 3, 1), (2, 3, 1), (2, 4, 2)
+        ]
+    finally:
+        _drop_session_caches_of(tmp_path)
+
+
+def test_first_gated_csr_runs_one_graph_load(spark, tmp_path):
+    """The first ``copurchase_csr_gated`` of a fresh session (a new sf dir
+    keys fresh session caches) runs the symmetric-list build, whose one
+    fill job also yields the edge stats, and the CSR collect — 6 Spark
+    jobs at sf0.001 with a known lineitem schema. A separate canonical
+    cache, edge-stats aggregate or schema inference would add jobs. The
+    second call runs none."""
+    import shutil
+
+    from spark_ml_algo_lib_master_tongji_spark.operators import graph
+    from spark_ml_algo_lib_master_tongji_spark.sources.readers import Catalog
+    from tests.conftest import spark_jobs
+
+    shutil.copy(f"{SF_SMOKE}/lineitem.parquet", tmp_path / "lineitem.parquet")
+    cat = Catalog(spark, str(tmp_path))
+    try:
+        cat.lineitem  # infer the schema outside the counted region
+        csr, jobs = spark_jobs(spark, lambda: graph.copurchase_csr_gated(cat))
+        assert csr is not None and jobs == 6, jobs
+        again, jobs = spark_jobs(spark, lambda: graph.copurchase_csr_gated(cat))
+        assert again is csr and jobs == 0, jobs
+        assert graph.copurchase_edge_stats(cat) == graph.copurchase_edge_stats(
+            Catalog(spark, SF_SMOKE)
+        )
+    finally:
+        _drop_session_caches_of(tmp_path)

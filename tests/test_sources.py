@@ -307,3 +307,38 @@ def test_save_as_table_and_insert_into(spark, tmp_path):
         assert {r["v"] for r in got.collect()} == set(range(15))
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_load_table_infers_each_file_version_once(spark, tmp_path):
+    """A second ``load_table`` of the same file runs no Spark job and
+    returns the identical schema and rows; a rewritten file (new mtime or
+    size) is inferred again and its new schema is returned."""
+    import os
+    import shutil
+
+    from spark_ml_algo_lib_master_tongji_spark.sources.readers import load_table
+    from tests.conftest import SF_SMOKE, spark_jobs
+
+    f = tmp_path / "nation.parquet"
+    shutil.copy(f"{SF_SMOKE}/nation.parquet", f)
+    first, jobs = spark_jobs(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    assert jobs == 1, jobs  # the schema-inference job
+    second, jobs = spark_jobs(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    assert jobs == 0, jobs
+    assert second.schema == first.schema
+    assert sorted(map(tuple, second.collect())) == sorted(map(tuple, first.collect()))
+
+    st = f.stat()
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))  # same bytes
+    _, jobs = spark_jobs(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    assert jobs == 1, jobs
+
+    spark.range(3).selectExpr("id AS n_nationkey", "'x' AS extra").write.mode(
+        "overwrite"
+    ).parquet(str(f) + ".new")
+    os.remove(f)
+    shutil.move(str(f) + ".new", f)  # the table is now a directory
+    third, jobs = spark_jobs(spark, lambda: load_table(spark, str(tmp_path), "nation"))
+    assert jobs == 1, jobs
+    assert third.columns == ["n_nationkey", "extra"]
+    assert sorted(r["n_nationkey"] for r in third.collect()) == [0, 1, 2]
